@@ -61,13 +61,12 @@ PER_LAYER = (
 
 def op_figures(tracer, roots, result) -> dict:
     """Figures of one timed operation; ``roots`` are its top-level spans:
-    the operation itself, then its serving reads (averaged per read)."""
+    the operation itself, then its serving read."""
     tracer.sc._jsc.sc().listenerBus().waitUntilEmpty()
     op_root = roots[0]
     whole = tracer.spark_stats(tracer.subtree(op_root))
     fig = {name: whole[key] for name, _, key in SPARK}
     for root in roots:
-        weight = 1.0 if root is op_root else 1.0 / (len(roots) - 1)
         for span in tracer.subtree(root):
             sfxs = SPANS.get(span.name)
             if not sfxs:
@@ -86,7 +85,7 @@ def op_figures(tracer, roots, result) -> dict:
                     stats = stats or tracer.spark_stats(tracer.subtree(span))
                     v = stats[sfx]
                 key = f"{span.name}.{sfx}"
-                fig[key] = fig.get(key, 0) + v * weight
+                fig[key] = fig.get(key, 0) + v
     if result.input_bytes and whole["csv_input_bytes"]:
         fig["sources.tebis_csv.csv_reads_per_byte"] = (
             whole["csv_input_bytes"] / result.input_bytes)

@@ -1,6 +1,6 @@
 """Product-path benchmark: one workload per process, printed as one JSON line.
 
-    python3 perfbench/run.py --workload tebis_backfill --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload tebis_backfill --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The engine package is imported from the
 directory above this one. Everything the run writes goes under
@@ -133,7 +133,7 @@ def drive(args, ctx: Context, wl) -> dict:
     for i in range(wl.warmup):
         t = time.perf_counter()
         r = wl.op()
-        log(phase="warmup", i=i, op_s=r.seconds, read_s=r.reads,
+        log(phase="warmup", i=i, op_s=r.seconds, read_s=r.read_s,
             wall_s=time.perf_counter() - t)
     tracer.count_unattributed()
     tracer.unattributed_jobs = 0
@@ -145,12 +145,6 @@ def drive(args, ctx: Context, wl) -> dict:
     rounds = 0
     while True:
         round_start = time.perf_counter()
-        attempted += wl.replays_per_round
-        try:
-            wl.start_of_round()
-        except CheckFailed as exc:  # the replay fault; see README.md
-            failed += 1
-            log(phase="start_of_round", known_fault=str(exc))
         for _ in range(wl.round_ops):
             attempted += 1
             tracer.op = len(results)
@@ -169,8 +163,15 @@ def drive(args, ctx: Context, wl) -> dict:
                 roots = [s for s in tracer.spans[n_spans:] if s.parent is None]
                 figures.append(layer_metrics.op_figures(tracer, roots, r))
             log(phase="timed", i=len(results) - 1, op_s=r.seconds,
-                read_s=r.reads, items=r.items)
+                read_s=r.read_s, items=r.items)
             tracer.count_unattributed()
+        attempted += wl.replays_per_round
+        try:
+            wl.end_of_round()
+        except CheckFailed as exc:  # the replay fault; see README.md
+            failed += 1
+            log(phase="end_of_round", known_fault=str(exc))
+        tracer.count_unattributed()
         rounds += 1
         round_s = time.perf_counter() - round_start
         if time.perf_counter() - timed_start + round_s > args.seconds:
@@ -197,10 +198,7 @@ def drive(args, ctx: Context, wl) -> dict:
             "setup_s": setup_s,
             "op_p50_s": statistics.median(ops),
             "items_per_s": items / sum(ops),
-            # The first read after an ingest is slower than the ones after
-            # it (about 0.9 s against 0.55 s on tebis_backfill); the median
-            # of each operation's reads keeps one mode per operation.
-            "read_p50_s": statistics.median(statistics.median(r.reads) for r in results),
+            "read_p50_s": statistics.median(r.read_s for r in results),
             "store_bytes_per_item": sum(r.store_bytes for r in results) / items,
             "heap_after_gc_mb": heap,
         }

@@ -1,13 +1,13 @@
 """Steadiness command: run one workload n times in fresh processes.
 
-    python3 perfbench/steady.py --workload tebis_backfill --runs 10 --seconds 30
+    python3 perfbench/steady.py --workload tebis_backfill --runs 10 --seconds 10
 
 Seeds are ``--first-seed`` .. ``--first-seed + runs - 1``. For each
 metric it prints the median, the quartiles (``statistics.quantiles(n=4)``),
 the minimum and maximum across runs, and the spread: (q3 - q1) / median.
-It also prints each run's failed/attempted share, and exits non-zero
-when a run fails or reports ``correct: false``. ``--json`` keeps every
-run's result line.
+Runs are untraced (``--trace 0``), so the metrics are the end-to-end
+ones. It also prints each run's failed/attempted share, and exits
+non-zero when a run fails or reports ``correct: false``.
 """
 
 from __future__ import annotations
@@ -27,10 +27,8 @@ def main() -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True)
     p.add_argument("--runs", type=int, default=10)
-    p.add_argument("--seconds", type=int, default=30)
+    p.add_argument("--seconds", type=int, default=10)
     p.add_argument("--first-seed", type=int, default=1)
-    p.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    p.add_argument("--json", type=Path, default=None)
     args = p.parse_args()
 
     results, ok = [], True
@@ -40,7 +38,7 @@ def main() -> int:
         proc = subprocess.run(
             [sys.executable, str(RUN), "--workload", args.workload,
              "--seed", str(seed), "--seconds", str(args.seconds),
-             "--trace", str(args.trace)],
+             "--trace", "0"],
             capture_output=True, text=True,
         )
         wall = time.perf_counter() - t0
@@ -51,20 +49,16 @@ def main() -> int:
                   file=sys.stderr)
             continue
         res = json.loads(lines[-1])
-        res["seed"], res["wall_s"] = seed, wall
-        res["log"] = [json.loads(x) for x in proc.stderr.splitlines()
-                      if x.startswith('{"phase"')]
+        res["wall_s"] = wall
         ok &= res["correct"]
         results.append(res)
         print(f"seed {seed}: {wall:.1f} s, failed {res['failed']}/{res['attempted']}",
               file=sys.stderr, flush=True)
-    if args.json:
-        args.json.write_text(json.dumps(results, indent=1))
     if len(results) < 2:
         return 1
 
     print(f"{args.workload}: {len(results)} runs, --seconds {args.seconds}, "
-          f"trace {args.trace}, run wall median "
+          f"run wall median "
           f"{statistics.median(r['wall_s'] for r in results):.1f} s")
     shares = sorted({f"{r['failed']}/{r['attempted']}" for r in results})
     print(f"failed/attempted: {', '.join(shares)}")

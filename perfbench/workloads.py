@@ -10,8 +10,8 @@ A workload exposes:
 - ``warmup``: operations run before timing starts;
 - ``round_ops``: timed operations per round (a run attempts whole
   rounds, so the share of failed operations is the same in every run);
-- ``reads_per_op``: serving reads made after each operation;
-- ``setup()``, ``start_of_round()``, ``op()``, ``final_checks()``.
+- ``replays_per_round``: untimed replay operations that close a round;
+- ``setup()``, ``op()``, ``end_of_round()``, ``final_checks()``.
 
 ``op`` returns an ``OpResult``; a check that fails raises ``CheckFailed``
 and the harness counts the operation as failed.
@@ -54,7 +54,7 @@ def check(cond: bool, what: str) -> None:
 class OpResult:
     seconds: float
     items: int
-    reads: list[float]  # wall time of each serving read after the operation
+    read_s: float  # wall time of the serving read after the operation
     store_bytes: int
     input_bytes: int = 0
 
@@ -152,13 +152,12 @@ def _files_archived(folder: Path, paths: list[Path]) -> None:
 class TebisBackfill(_Tebis):
     """``run_historical`` over a fresh folder of 40 files per operation,
     then an hourly aggregate read of the day just ingested. Each round
-    starts with a replay of the folder ingested last (copies, mtimes
+    ends with a replay of the folder ingested last (copies, mtimes
     kept), checked for exactly-once rows."""
 
     name = "tebis_backfill"
     warmup = 1
-    round_ops = 3
-    reads_per_op = 3
+    round_ops = 1
     replays_per_round = 1
     cores = 4
 
@@ -185,8 +184,7 @@ class TebisBackfill(_Tebis):
         check(res["datapoints"] == self.batch_points[k],
               f"datapoints {res['datapoints']} != {self.batch_points[k]}")
         _files_archived(folder, paths)
-        reads = [self.read(k) for _ in range(self.reads_per_op)]
-        return OpResult(secs, self.batch_points[k], reads, stored, folder_bytes(
+        return OpResult(secs, self.batch_points[k], self.read(k), stored, folder_bytes(
             [folder / "finished" / p.name for p in paths]))
 
     def read(self, k: int) -> float:
@@ -209,7 +207,7 @@ class TebisBackfill(_Tebis):
                   f"aggregate read {key}: {r.n_points},{r.sum_value} != {n},{s}")
         return secs
 
-    def start_of_round(self) -> None:
+    def end_of_round(self) -> None:
         """Replay: re-run the folder ingested last, from copies."""
         k, folder = self.last
         replay = self.ctx.work / "in" / f"replay{k}"
@@ -237,9 +235,8 @@ class TebisLive(_Tebis):
     latest-value read for 10 series."""
 
     name = "tebis_live"
-    warmup = 6
+    warmup = 1
     round_ops = 1
-    reads_per_op = 1
     replays_per_round = 0
     cores = 4
 
@@ -268,8 +265,7 @@ class TebisLive(_Tebis):
         check(res["datapoints"] == self.batch_points[k],
               f"datapoints {res['datapoints']} != {self.batch_points[k]}")
         _files_archived(self.inbox, paths)
-        reads = [self.read(k) for _ in range(self.reads_per_op)]
-        return OpResult(secs, self.batch_points[k], reads, stored,
+        return OpResult(secs, self.batch_points[k], self.read(k), stored,
                         folder_bytes([self.finished / p.name for p in paths]))
 
     def read(self, k: int) -> float:
@@ -288,7 +284,7 @@ class TebisLive(_Tebis):
             check(got[x] == newest[x], f"latest read {x}: {got[x]} != {newest[x]}")
         return secs
 
-    def start_of_round(self) -> None:
+    def end_of_round(self) -> None:
         pass
 
     def final_checks(self) -> None:
@@ -310,9 +306,8 @@ class CorpusShards:
     then a BM25 top-10 read for a fixed query."""
 
     name = "corpus_shards"
-    warmup = 3
-    round_ops = 3
-    reads_per_op = 1
+    warmup = 1
+    round_ops = 2
     replays_per_round = 0
     cores = 4
     spans = [
@@ -321,7 +316,6 @@ class CorpusShards:
         ("datapoints_csv_extractor_spark.operators.dedup", "dedup_incremental"),
         ("datapoints_csv_extractor_spark.sinks.corpus", "write_corpus"),
         ("datapoints_csv_extractor_spark.operators.textops", "append_bm25_shard"),
-        ("datapoints_csv_extractor_spark.operators.textops", "build_bm25_index"),
     ]
 
     def __init__(self, ctx):
@@ -362,8 +356,7 @@ class CorpusShards:
         n_copies = sum(1 for d in exp.copies if d // 1000 == k + 1)
         check(res["duplicate"] >= n_copies, f"duplicate {res['duplicate']} < {n_copies}")
         check(res["indexed"] == res["published"], f"indexed {res['indexed']}")
-        reads = [self.read() for _ in range(self.reads_per_op)]
-        return OpResult(secs, n_docs, reads, stored, os.path.getsize(path))
+        return OpResult(secs, n_docs, self.read(), stored, os.path.getsize(path))
 
     def read(self) -> float:
         with self.ctx.tracer.span("operators.textops.bm25_topk_from_index"):
@@ -377,7 +370,7 @@ class CorpusShards:
         self.hits.extend(r.doc_id for r in rows)
         return secs
 
-    def start_of_round(self) -> None:
+    def end_of_round(self) -> None:
         pass
 
     def final_checks(self) -> None:
