@@ -5,8 +5,9 @@
 Run from the repository root. The engine package is imported from the
 directory above this one. Everything the run writes goes under
 ``.bench_work/<workload>-<pid>/`` in that directory (Spark's scratch
-dirs and the JVM's temp dir included) and is removed at exit; a traced
-run also leaves its spans in ``.bench_out/``.
+dirs and the JVM's temp dir included) and is removed at exit, once the
+JVM and every process below it have ended; a traced run also leaves
+its spans in ``.bench_out/``.
 
 The last line of stdout is ``{"correct", "attempted", "failed",
 "metrics"}``: the end-to-end metrics with ``--trace 0``, the per-layer
@@ -26,7 +27,9 @@ import argparse  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
 import statistics  # noqa: E402
+import subprocess  # noqa: E402
 import sys  # noqa: E402
 from pathlib import Path  # noqa: E402
 
@@ -78,6 +81,94 @@ def start_spark(work: Path, cores: int):
     return spark
 
 
+def descendants(pid: int) -> list[int]:
+    """Every process below ``pid`` (zombies too), read from /proc."""
+    children: dict[int, list[int]] = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            stat = Path(f"/proc/{d}/stat").read_text()
+        except OSError:
+            continue
+        ppid = int(stat.rsplit(")", 1)[1].split()[1])
+        children.setdefault(ppid, []).append(int(d))
+    out, todo = [], [pid]
+    while todo:
+        for c in children.get(todo.pop(), []):
+            out.append(c)
+            todo.append(c)
+    return out
+
+
+def _alive(pid: int) -> bool:
+    try:
+        stat = Path(f"/proc/{pid}/stat").read_text()
+    except OSError:
+        return False
+    return stat.rsplit(")", 1)[1].split()[0] != "Z"
+
+
+def become_subreaper() -> None:
+    """Have processes orphaned below this one (the JVM launcher's helper
+    shells, Python workers whose JVM has gone) re-parented to this
+    process, so that ``stop_spark`` can reap them."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def reap() -> None:
+    """Collect every child of this process that has ended."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def stop_spark(spark) -> None:
+    """Stop the session (if one was started), then the JVM and every
+    process below this one, and wait until each has ended.
+    ``spark.stop()`` alone leaves the JVM up until this process exits;
+    the JVM then sees its stdin close and exits on its own, after this
+    process is gone. Whatever is still running 30 s after the JVM has
+    ended is killed."""
+    from pyspark import SparkContext
+
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        gateway = SparkContext._gateway
+        if gateway is not None:
+            jvm = gateway.proc
+            gateway.shutdown()
+            SparkContext._gateway = SparkContext._jvm = None
+            jvm.stdin.close()  # the gateway server exits on EOF
+            try:
+                jvm.wait(timeout=60)
+            except subprocess.TimeoutExpired:
+                jvm.kill()
+                jvm.wait()
+        deadline = time.monotonic() + 30
+        while True:
+            reap()
+            left = [p for p in descendants(os.getpid()) if _alive(p)]
+            if not left:
+                break
+            if time.monotonic() > deadline:
+                for pid in left:
+                    try:
+                        os.kill(pid, signal.SIGKILL)
+                    except OSError:
+                        pass
+            time.sleep(0.05)
+
+
 def heap_after_gc_mb(spark) -> float:
     """Heap in use after full GCs. Python's collector runs first so py4j
     releases the JVM objects it still references. Spark's context cleaner
@@ -110,6 +201,7 @@ def run(args) -> dict:
     work.mkdir(parents=True)
     os.environ["TMPDIR"] = str(work / "tmp")
     ctx = Context(args.seed, work)
+    become_subreaper()
     try:
         ctx.spark = start_spark(work, cls.cores)
         ctx.tracer = Tracer(ctx.spark, enabled=bool(args.trace))
@@ -119,9 +211,10 @@ def run(args) -> dict:
         ctx.tracer.begin_outside()
         return drive(args, ctx, wl)
     finally:
-        if ctx.spark is not None:
-            ctx.spark.stop()
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            stop_spark(ctx.spark)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
 
 
 def drive(args, ctx: Context, wl) -> dict:
@@ -132,7 +225,7 @@ def drive(args, ctx: Context, wl) -> dict:
     wl.setup()
     for i in range(wl.warmup):
         t = time.perf_counter()
-        r = wl.op()
+        r = wl.op(warmup=True)
         log(phase="warmup", i=i, op_s=r.seconds, read_s=r.read_s,
             wall_s=time.perf_counter() - t)
     tracer.count_unattributed()
@@ -216,6 +309,8 @@ def main() -> int:
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
     args = p.parse_args()
+    # A SIGTERM unwinds through run()'s cleanup like an exception would.
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     sys.path.insert(0, str(ROOT))
     try:
         import datapoints_csv_extractor_spark  # noqa: F401
