@@ -125,14 +125,15 @@ def main(argv: list[str] | None = None) -> int:
             textfile=args.metrics_textfile,
         )
 
+    def _record(stats: dict) -> None:
+        # Every batch's stats feed the exporter: live triggers, the
+        # drain's flush and the historical run alike.
+        if exporter is not None:
+            exporter.record_batch(stats)
+            exporter.push()
+
     if args.live:
         checkpoint = args.checkpoint or f"{args.output}_checkpoint"
-
-        def _on_batch(batch_id: int, stats: dict) -> None:
-            if exporter is not None:
-                exporter.record_batch(stats)
-                exporter.push()
-
         query = run_live(
             spark,
             input_dir=args.input,
@@ -141,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=checkpoint,
             delete_on_success=not args.keep_finished,
             available_now=args.drain,
-            on_batch=_on_batch,
+            on_batch=lambda _batch_id, stats: _record(stats),
         )
         query.awaitTermination()
         if args.drain:
@@ -159,6 +160,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             if flushed["files"]:
                 logger.info("drain flush: %s", flushed)
+                _record(flushed)
         return 0
 
     stats = run_historical(
@@ -170,6 +172,7 @@ def main(argv: list[str] | None = None) -> int:
         time_until=args.until_time,
         delete_on_success=not args.keep_finished,
     )
+    _record(stats)
     print(
         f"Extraction complete: {stats['files']} files, "
         f"{stats['datapoints']} datapoints, {stats['new_series']} new series"

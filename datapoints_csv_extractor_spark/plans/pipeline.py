@@ -1,11 +1,11 @@
 """End-to-end pipelines: the reference's two entry points, Spark-first.
 
 - ``run_historical`` = entry point 1 (main.py:80-123 with
-  live_mode=False): prune files by filename timestamp, ingest all of
-  them as ONE distributed plan, write the datapoints table, upsert the
-  catalog, archive inputs. The reference's 20-file flush barrier (C2)
-  and thread fan-out (C1) disappear — Spark's task scheduler IS the
-  pipeline; the whole folder is one job.
+  live_mode=False): prune files by filename timestamp and hand them
+  all to ``streaming.live.process_batch`` — the batch function of live
+  mode too, which states the catalog rule and failure policy — as ONE
+  batch. The reference's 20-file flush barrier (C2) and thread fan-out
+  (C1) disappear — Spark's task scheduler IS the pipeline.
 - ``run_live`` = entry point 2 (main.py --live): delegates to
   streaming.live.start_live_ingest (Structured Streaming, 8 s trigger).
 
@@ -18,20 +18,16 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from datapoints_csv_extractor_spark.sinks.catalog_store import append_missing
-from datapoints_csv_extractor_spark.sinks.datapoints import write_datapoints
-from datapoints_csv_extractor_spark.sinks.lifecycle import (
-    finalize_succeeded,
-    quarantine_failed,
-    setup_directories,
-)
+from datapoints_csv_extractor_spark.sinks.lifecycle import setup_directories
 from datapoints_csv_extractor_spark.sources.files import find_historical_files
-from datapoints_csv_extractor_spark.sources.tebis_csv import read_datapoints
-from datapoints_csv_extractor_spark.streaming.live import start_live_ingest
+from datapoints_csv_extractor_spark.streaming.live import (
+    process_batch,
+    start_live_ingest,
+)
 
 
 def ingest_metrics(datapoints: DataFrame) -> DataFrame:
@@ -60,36 +56,22 @@ def run_historical(
     time_from: int | None = None,
     time_until: int | None = None,
     delete_on_success: bool = False,
-    archive: bool = True,
 ) -> dict[str, int]:
-    """Historical batch run; returns run metrics.
+    """Historical batch run; returns the batch stats of ``process_batch``.
 
     The reference processes files serially in ascending-ts order with a
     flush every 20 (csv_extractor.py:206-236). Order only matters there
     because the catalog dict mutates mid-run; our catalog upsert is a
     set-union over the WHOLE batch (deterministic via min(name) —
     sources/catalog.py), so all files ingest as one unordered
-    distributed scan without changing any outcome.
+    distributed batch without changing any outcome.
     """
-    finished_dir, failed_dir = setup_directories(input_dir) if archive else (None, None)
+    finished_dir, failed_dir = setup_directories(input_dir)
     paths = find_historical_files(input_dir, time_from, time_until)
-    if not paths:
-        return {"files": 0, "datapoints": 0, "new_series": 0}
-    try:
-        dp = read_datapoints(spark, paths)
-        obs = Observation("historical_metrics")
-        write_datapoints(
-            dp.observe(obs, F.count(F.lit(1)).alias("datapoints")), str(sink_dir)
-        )
-        n_points = int(obs.get["datapoints"])
-        n_new = append_missing(spark, dp, catalog_path)
-    except Exception:
-        if failed_dir is not None:
-            quarantine_failed(paths, failed_dir)
-        raise
-    if archive:
-        finalize_succeeded(paths, finished_dir, delete=delete_on_success)
-    return {"files": len(paths), "datapoints": n_points, "new_series": n_new}
+    return process_batch(
+        spark, paths, sink_dir, catalog_path, finished_dir, failed_dir,
+        delete_on_success=delete_on_success,
+    )
 
 
 def run_live(

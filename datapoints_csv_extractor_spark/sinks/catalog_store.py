@@ -131,10 +131,11 @@ def append_missing(
 ) -> int:
     """Create-if-missing upsert (J1 + S8); returns #series created.
 
-    The count comes back from the same job that writes (no second
-    scan): the new rows are tiny (bounded by distinct new series per
-    batch), so a local checkpointless ``collect``-free write + count
-    via ``observe`` would be overkill — we just cache the small frame.
+    ``datapoints`` carries ``external_id`` and ``name``; the ingest
+    passes the local set of pairs its write job observed, so the only
+    files read here are the catalog store's own. The new rows (at most
+    one per series of the batch) are collected once: their count is
+    the return value and the append writes them as one file.
 
     The load-probe-append sequence holds ``catalog_lock`` so two
     writers can't both miss the same series and append it twice —
@@ -142,11 +143,8 @@ def append_missing(
     """
     with catalog_lock(path):
         catalog = load_catalog(spark, path)
-        new_rows = missing_series(datapoints, catalog).cache()
-        try:
-            n_new = new_rows.count()
-            if n_new:
-                new_rows.write.mode("append").parquet(str(path))
-            return n_new
-        finally:
-            new_rows.unpersist()
+        new_rows = missing_series(datapoints, catalog).collect()
+        if new_rows:
+            new = spark.createDataFrame(new_rows, CATALOG_SCHEMA).coalesce(1)
+            new.write.mode("append").parquet(str(path))
+        return len(new_rows)

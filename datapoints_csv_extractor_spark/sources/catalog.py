@@ -6,8 +6,8 @@ with an auto description when the external_id is unknown
 (csv_extractor.py:107-112, trigger :151-154), mutating the dict.
 
 Spark-first: the catalog is a small dimension DataFrame; "membership
-probe + create" becomes one distinct + broadcast LEFT ANTI join + union
-(SURVEY.md §2.5 J1). The store-side upsert (`sinks/catalog_store.py:
+probe + create" becomes one grouped min(name) + broadcast LEFT ANTI
+join (SURVEY.md §2.5 J1). The store-side upsert (`sinks/catalog_store.py:
 append_missing`) serializes concurrent writers with an exclusive lock
 file; a transactional table format's MERGE remains the fleet-scale
 upgrade (SURVEY.md §7 "what's hard" #5).
@@ -26,6 +26,10 @@ CATALOG_COLUMNS = ["external_id", "name", "description"]
 def missing_series(datapoints: DataFrame, catalog: DataFrame) -> DataFrame:
     """Series observed in the datapoints but absent from the catalog.
 
+    ``datapoints`` needs only ``external_id`` and ``name``: the ingest
+    passes the small set of pairs its write job observed, not the
+    parsed batch (streaming/live.py:process_batch).
+
     ``groupBy(external_id).min(name)`` makes the representative name
     deterministic (the reference takes whichever file it parses first —
     order-dependent; we pin min() and test it). The catalog is the
@@ -40,9 +44,3 @@ def missing_series(datapoints: DataFrame, catalog: DataFrame) -> DataFrame:
         .select(*CATALOG_COLUMNS)
     )
 
-
-def upsert_catalog(datapoints: DataFrame, catalog: DataFrame) -> DataFrame:
-    """Catalog after auto-creating every unseen series (J1 + S8)."""
-    return catalog.select(*CATALOG_COLUMNS).unionByName(
-        missing_series(datapoints, catalog)
-    )

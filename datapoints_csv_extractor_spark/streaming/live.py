@@ -18,12 +18,12 @@ Spark-first re-expression:
   seconds")`` reproduces the poll cadence (ST1).
 - **Processing** happens in ``foreachBatch``: the micro-batch yields
   the new file paths (≤20 — a tiny driver-side collect of *metadata*,
-  not data); the proven batch plan (sources/tebis_csv.read_datapoints)
-  re-reads exactly those files distributed, writes the datapoints
-  sink, upserts the catalog (ST5 state = the dimension table, not
-  stream state — SURVEY.md §2.8), then archives the inputs (S9).
-  Re-reading ≤20 small files costs one extra scan but keeps ONE parser
-  implementation — no batch/streaming semantic drift.
+  not data) for ``process_batch``, the batch function historical runs
+  use too: it parses those files once, writes the datapoints sink,
+  upserts the catalog from the series the write observed (ST5 state =
+  the dimension table, not stream state — SURVEY.md §2.8), then
+  archives the inputs (S9). ONE parser, ONE batch sequence — no
+  batch/streaming semantic drift.
 - The 1 s mtime settle guard (ST3, csv_extractor.py:270-276) is
   EXACT in streaming mode: the file-stream source commits a file to
   its seen-files log at listing time, so a not-yet-settled file can't
@@ -130,39 +130,49 @@ def process_batch(
     delete_on_success: bool = False,
     latest_store_path: str | None = None,
 ) -> dict[str, int]:
-    """One live cycle over explicit paths: ingest -> sink -> upsert -> archive.
+    """The one batch function (historical, live trigger, drain flush):
+    sink -> catalog -> latest store -> archive, mirroring process_files
+    + post_all_data (csv_extractor.py:199-236, 175-196).
 
-    Mirrors process_files + post_all_data (csv_extractor.py:199-236,
-    175-196) with per-batch failure containment (ST7): if the batch
-    fails, its files go to ``failed/`` and the error re-raises (the
-    streaming engine will retry the batch from the checkpoint).
+    The CSVs are parsed once for the sink and the catalog: the write
+    observes the datapoint count and the (external_id, name) pairs it
+    wrote (SURVEY.md §2.6). **Catalog rule:** a series is created in
+    the first batch where it has a valid value; an all-empty column
+    or the empty cell after a trailing ';' creates nothing.
+    **Failure policy** (ST7): a read or write failure moves the files
+    to ``failed_dir`` and re-raises (the stream retries the batch); a
+    catalog or latest-store failure re-raises and leaves them in place.
     """
     if not paths:
         return {"files": 0, "datapoints": 0, "series": 0, "new_series": 0}
     try:
         dp = read_datapoints(spark, paths)
-        # A1/A2-grade metrics ride along on the write action via
-        # observe() instead of a second scan (SURVEY.md §2.6).
         obs = Observation("ingest_metrics")
-        observed = dp.observe(
-            obs,
-            F.count(F.lit(1)).alias("datapoints"),
-            F.approx_count_distinct("external_id").alias("series"),
+        write_datapoints(
+            dp.observe(
+                obs,
+                F.count(F.lit(1)).alias("datapoints"),
+                F.collect_set(F.struct("external_id", "name")).alias("series"),
+            ),
+            str(sink_dir),
         )
-        write_datapoints(observed, str(sink_dir))
         metrics = obs.get
     except Exception:
         if failed_dir is not None:
             quarantine_failed(paths, failed_dir)
         raise
-    n_new = append_missing(spark, dp, catalog_path)
+    observed = spark.createDataFrame(
+        metrics["series"], "external_id string, name string"
+    )
+    n_new = append_missing(spark, observed, catalog_path)
     if latest_store_path is not None:
         # Serving index: fold this batch's newest point per series
         # into the bucketed upsert store, so 'latest value' reads are
         # an O(store) point lookup instead of a full-history scan.
         # The batch pre-reduces to one candidate per series (the same
         # max_by shape the store's merge applies), version-ordered by
-        # (ts_ms, value) for a deterministic same-timestamp tie.
+        # (ts_ms, value) for a deterministic same-timestamp tie, and
+        # is checkpointed: the store's census and merge skip the CSVs.
         from datapoints_csv_extractor_spark.sinks.merge_store import (
             upsert_into_store,
         )
@@ -176,6 +186,7 @@ def process_batch(
                 ).alias("value"),
             )
             .withColumn("deleted", F.lit(False))
+            .localCheckpoint()
         )
         upsert_into_store(
             spark, latest, latest_store_path,
@@ -185,7 +196,7 @@ def process_batch(
     return {
         "files": len(paths),
         "datapoints": int(metrics["datapoints"]),
-        "series": int(metrics["series"]),
+        "series": len({r.external_id for r in metrics["series"]}),
         "new_series": n_new,
     }
 

@@ -113,6 +113,33 @@ def test_cli_live_drain_writes_metrics_textfile(spark, tmp_path):
     assert m and int(m.group(1)) > 0
 
 
+def test_cli_historical_writes_metrics_textfile(spark, tmp_path, capsys):
+    """A historical run feeds its batch stats to the exporter too: the
+    textfile's posted-datapoints counter equals the printed count."""
+    import re
+
+    folder = tmp_path / "incoming"
+    folder.mkdir()
+    write_tebis_csv(folder, file_ts=1550092560, n_series=2, n_rows=10, seed=41)
+    metrics = tmp_path / "metrics.prom"
+    rc = main(
+        [
+            "-i", str(folder),
+            "-o", str(tmp_path / "dp"),
+            "--keep-finished",
+            "--metrics-textfile", str(metrics),
+        ]
+    )
+    assert rc == 0
+    printed = int(re.search(r"(\d+) datapoints", capsys.readouterr().out).group(1))
+    assert printed > 0
+    m = re.search(
+        r'csv_hist_posted_data_points_total\{project_name="default"\} ([\d.]+)',
+        metrics.read_text(),
+    )
+    assert m and float(m.group(1)) == printed
+
+
 def test_corpus_cli_batch_ledger(spark, tmp_path, capsys):
     import json
 

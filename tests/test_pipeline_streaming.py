@@ -18,8 +18,12 @@ from datapoints_csv_extractor_spark.plans.pipeline import (
 )
 from datapoints_csv_extractor_spark.sinks.catalog_store import load_catalog
 from datapoints_csv_extractor_spark.sinks.datapoints import post_datapoints
+from datapoints_csv_extractor_spark.sinks.lifecycle import setup_directories
 from datapoints_csv_extractor_spark.sources.tebis_csv import read_datapoints
-from datapoints_csv_extractor_spark.streaming.live import start_live_ingest
+from datapoints_csv_extractor_spark.streaming.live import (
+    process_batch,
+    start_live_ingest,
+)
 from fixtures import write_tebis_csv
 
 
@@ -237,19 +241,107 @@ def test_post_datapoints_chunking(spark, tmp_path):
     assert sum(len(r) for r in requests) == len(seen)
 
 
-def test_run_historical_failure_quarantines_inputs(spark, tmp_path):
-    """ST7: when the batch fails (sink path is unwritable), inputs move
-    to failed/ and the error propagates."""
+def _run_batch(kind: str, spark, folder: Path, sink: Path, catalog: Path, **kw):
+    """One ingest batch over every csv in ``folder``, through either
+    entry point; both archive to ``finished/`` and quarantine to
+    ``failed/`` beside the inputs."""
+    if kind == "run_historical":
+        return run_historical(spark, folder, sink, catalog)
+    finished, failed = setup_directories(folder)
+    return process_batch(
+        spark, sorted(folder.glob("*.csv")), sink, catalog,
+        finished_dir=finished, failed_dir=failed, **kw,
+    )
+
+
+@pytest.mark.parametrize("kind", ["run_historical", "process_batch"])
+def test_batch_failure_policy(spark, tmp_path, kind):
+    """ST7, one failure policy for both entry points: a sink failure
+    moves the inputs to failed/ and re-raises; a catalog failure (after
+    the data commit) re-raises and leaves the inputs in place."""
     folder = _make_folder(tmp_path, n_files=2)
-    sink = tmp_path / "sink_blocker"
-    sink.write_text("not a directory")  # parquet write will fail
-
+    blocked_sink = tmp_path / "sink_blocker"
+    blocked_sink.write_text("not a directory")  # parquet write fails
     with pytest.raises(Exception):
-        run_historical(spark, folder, sink, tmp_path / "catalog")
-
+        _run_batch(kind, spark, folder, blocked_sink, tmp_path / "catalog")
     assert list(folder.glob("*.csv")) == []
     assert len(list((folder / "failed").glob("*.csv"))) == 2
     assert list((folder / "finished").glob("*.csv")) == []
+
+    (tmp_path / "second").mkdir()
+    folder = _make_folder(tmp_path / "second", n_files=2)
+    sink = tmp_path / "dp"
+    blocked_catalog = tmp_path / "catalog_blocker"
+    blocked_catalog.write_text("not a parquet store")  # catalog read fails
+    with pytest.raises(Exception):
+        _run_batch(kind, spark, folder, sink, blocked_catalog)
+    assert len(list(folder.glob("*.csv"))) == 2
+    assert list((folder / "failed").glob("*.csv")) == []
+    assert list((folder / "finished").glob("*.csv")) == []
+    assert spark.read.parquet(str(sink)).count() > 0  # data committed first
+
+
+def test_catalog_rule_needs_a_valid_value(spark, tmp_path):
+    """A series enters the catalog in the first batch where it has a
+    valid value: an all-empty column and the empty cell a trailing ';'
+    adds to the header create nothing; the empty column's series is
+    created by the later batch that carries its first value."""
+    folder = tmp_path / "incoming"
+    folder.mkdir()
+    sink, catalog = tmp_path / "dp", tmp_path / "catalog"
+    (folder / "p_1550000000.csv").write_text(
+        ";a : A;b : B;\n"
+        "Zeitstempel;u;u;\n"
+        "1550000000;1,0;;\n"
+        "1550000060;2,0;;\n",
+        encoding="iso-8859-1",
+    )
+    first = _run_batch("process_batch", spark, folder, sink, catalog)
+    assert (first["series"], first["new_series"]) == (1, 1)
+    assert {r.external_id for r in load_catalog(spark, catalog).collect()} == {"a"}
+
+    (folder / "p_1550000120.csv").write_text(
+        ";a : A;b : B\n"
+        "Zeitstempel;u;u\n"
+        "1550000120;3,0;4,0\n",
+        encoding="iso-8859-1",
+    )
+    second = _run_batch("process_batch", spark, folder, sink, catalog)
+    assert (second["series"], second["new_series"]) == (2, 1)
+    rows = {r.external_id: r.name for r in load_catalog(spark, catalog).collect()}
+    assert rows == {"a": "A", "b": "B"}
+
+
+def test_batch_consumers_do_not_rescan_csv(spark, tmp_path, monkeypatch):
+    """Scale guard in the style of test_ingest_plan_has_no_shuffle: the
+    catalog upsert and the latest-store merge read what the batch
+    already produced (the write's observed series, a checkpointed
+    per-series delta), never the csv files again."""
+    from datapoints_csv_extractor_spark.sinks import merge_store
+    from datapoints_csv_extractor_spark.streaming import live
+
+    handed: dict[str, str] = {}
+
+    def capture(name, original):
+        def wrapper(spark_, df, *args, **kwargs):
+            handed[name] = df._jdf.queryExecution().executedPlan().toString()
+            return original(spark_, df, *args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(live, "append_missing", capture("catalog", live.append_missing))
+    monkeypatch.setattr(
+        merge_store, "upsert_into_store",
+        capture("latest", merge_store.upsert_into_store),
+    )
+    folder = _make_folder(tmp_path, n_files=2)
+    stats = _run_batch(
+        "process_batch", spark, folder, tmp_path / "dp", tmp_path / "catalog",
+        latest_store_path=str(tmp_path / "latest"),
+    )
+    assert stats["new_series"] > 0
+    assert set(handed) == {"catalog", "latest"}
+    for name, plan in handed.items():
+        assert "FileScan csv" not in plan, (name, plan)
 
 
 def test_run_rollup_continuous_aggregate(spark, tmp_path):

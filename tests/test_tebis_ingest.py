@@ -19,7 +19,6 @@ from datapoints_csv_extractor_spark.functions.tebis import (
 from datapoints_csv_extractor_spark.sources.catalog import (
     AUTO_DESCRIPTION,
     missing_series,
-    upsert_catalog,
 )
 from datapoints_csv_extractor_spark.sources.files import find_historical_files
 from datapoints_csv_extractor_spark.sources.tebis_csv import (
@@ -185,10 +184,10 @@ def test_catalog_create_if_missing(spark, tmp_path):
     # seed=7 -> ids 700,701,702; 700 already exists.
     assert set(r.external_id for r in new.collect()) == {"701", "702"}
     assert set(r.description for r in new.collect()) == {AUTO_DESCRIPTION}
-    merged = upsert_catalog(dps, catalog)
+    # Idempotent: against the merged catalog nothing is missing.
+    merged = catalog.unionByName(new)
     assert merged.count() == 3
-    # Idempotent: second upsert creates nothing.
-    assert upsert_catalog(dps, merged).count() == 3
+    assert missing_series(dps, merged).count() == 0
 
 
 def test_ingest_plan_has_no_shuffle(spark, tmp_path):
