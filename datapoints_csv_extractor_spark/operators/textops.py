@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.operators.relational import load
@@ -1250,11 +1251,18 @@ def _bm25_write_shard(
     """Write one shard's postings under postings/shard=<id>/bucket=N
     (overwrite — a crashed partial shard is simply rewritten on
     replay) and return its stats entry. Not committed until the
-    caller folds it into meta."""
-    d = docs.select("doc_id", tokens(F.col("text")).alias("toks")).select(
-        "doc_id", F.size("toks").alias("dl"), "toks"
+    caller folds it into meta. The stats are observed on the postings
+    write itself, so the shard is scanned once."""
+    stats = Observation()
+    shard_stats = (
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("dl_sum"),
     )
-    n_docs, dl_sum = d.agg(F.count(F.lit(1)), F.sum("dl")).first()
+    d = (
+        docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+        .select("doc_id", F.size("toks").alias("dl"), "toks")
+        .observe(stats, *shard_stats)
+    )
     # Positions ride along (0-based token offsets, sorted): they make
     # the store PHRASE-CAPABLE (bucket-pruned candidate fetch +
     # position-adjacency verify) at the cost of one int per token —
@@ -1275,7 +1283,14 @@ def _bm25_write_shard(
     postings.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(index_dir, "postings", f"shard={shard_id}")
     )
-    return {"n_docs": n_docs, "dl_sum": dl_sum or 0}
+    try:
+        got = stats.get
+    except Py4JJavaError:
+        # A known-empty input (an empty local frame) lets adaptive
+        # execution prune the observed stage, which leaves no metrics
+        # row to read; aggregate the input directly instead.
+        got = d.agg(*shard_stats).first().asDict()
+    return {"n_docs": got["n_docs"], "dl_sum": got["dl_sum"]}
 
 
 def build_bm25_index(

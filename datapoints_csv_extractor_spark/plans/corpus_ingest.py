@@ -28,7 +28,7 @@ This is the reference's fetch-known/create-missing batch loop
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.operators.curation import (
@@ -44,6 +44,13 @@ from datapoints_csv_extractor_spark.operators.textops import (
     tokens,
 )
 from datapoints_csv_extractor_spark.sinks.corpus import write_corpus
+
+
+def _checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialise ``df`` and read its row count off that same job."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return out, obs.get["n"]
 
 
 def ingest_corpus_shard(
@@ -114,6 +121,9 @@ def ingest_corpus_shard(
     ``indexed`` (docs folded into the optional standing BM25 store at
     ``bm25_index_path`` — published text becomes immediately
     searchable, same per-shard idempotence as the band-store fold).
+    Every count is an ``Observation`` read off the checkpoint job that
+    already materialises the rows it counts; no stage runs a
+    ``count()`` of its own.
     """
     # One id drives BOTH persisted folds (band store + BM25 store).
     # When the caller didn't supply one, mint a fresh uuid — the
@@ -126,20 +136,19 @@ def ingest_corpus_shard(
 
         ingest_id = uuid.uuid4().hex[:12]
 
-    shard = shard.localCheckpoint()  # one materialization feeds 3 consumers
-    n_received = shard.count()
-
-    n_pii = 0
+    # The raw count, the PII count, the quality gate and the resample
+    # ride one checkpoint job; each later gate's "before" is the
+    # previous gate's observed "after".
+    raw = Observation()
+    raw_aggs = [F.count(F.lit(1)).alias("n")]
     if redact_pii:
         c = pii_counts(F.col("text"))
-        flagged = pii_redact(shard)
-        n_pii = (
-            flagged.where((c["n_emails"] + c["n_phones"] + c["n_ips"]) > 0).count()
-        )
+        flagged = (c["n_emails"] + c["n_phones"] + c["n_ips"]) > 0
+        raw_aggs.append(F.count(F.when(flagged, 1)).alias("n_pii"))
+    shard = shard.observe(raw, *raw_aggs)
+    if redact_pii:
         shard = (
-            flagged.drop("text")
-            .withColumnRenamed("text_redacted", "text")
-            .localCheckpoint()
+            pii_redact(shard).drop("text").withColumnRenamed("text_redacted", "text")
         )
 
     quality_ok = quality_passes(F.col("text"))
@@ -147,10 +156,7 @@ def ingest_corpus_shard(
         quality_ok = quality_ok & (
             quality_classifier_score(tokens(F.col("text"))) >= classifier_threshold
         )
-    passed = shard.where(quality_ok).localCheckpoint()
-    n_passed = passed.count()
-
-    n_resampled_out = 0
+    passed = shard.where(quality_ok)
     if resample_thresholds:
         bound = F.coalesce(
             *(
@@ -161,10 +167,15 @@ def ingest_corpus_shard(
                 + [F.lit("zz")]
             )
         )
-        bucket = md5_prefix_bucket(F.col("doc_id"))
-        sampled = passed.where(bucket < bound).localCheckpoint()
-        n_resampled_out = n_passed - sampled.count()
-        passed = sampled
+        quality = Observation()
+        passed = passed.observe(quality, F.count(F.lit(1)).alias("n")).where(
+            md5_prefix_bucket(F.col("doc_id")) < bound
+        )
+    passed, n_current = _checkpoint_counted(passed)
+    got = raw.get
+    n_received, n_pii = got["n"], got.get("n_pii", 0)
+    n_passed = quality.get["n"] if resample_thresholds else n_current
+    n_resampled_out = n_passed - n_current
 
     n_line_deduped = 0
     if line_dedup_tokens is not None:
@@ -174,25 +185,23 @@ def ingest_corpus_shard(
 
         reassembled = line_dedup_reassemble(
             passed.select("doc_id", "text"), tokens_per_line=line_dedup_tokens
-        ).localCheckpoint()
-        n_line_deduped = reassembled.where(
-            F.col("n_kept_lines") < F.col("n_lines")
-        ).count()
+        ).select(
+            "doc_id",
+            F.col("retained_text").alias("__retained"),
+            (F.col("n_kept_lines") < F.col("n_lines")).alias("__rewritten"),
+        )
         # Left join + coalesce: zero-line docs (empty text) produce no
         # reassembly row but must not vanish from the shard here —
         # the quality gate owns that decision.
+        rewritten = Observation()
         passed = (
-            passed.join(
-                reassembled.select(
-                    "doc_id", F.col("retained_text").alias("__retained")
-                ),
-                "doc_id",
-                "left",
-            )
+            passed.join(reassembled, "doc_id", "left")
+            .observe(rewritten, F.count(F.when(F.col("__rewritten"), 1)).alias("n"))
             .withColumn("text", F.coalesce(F.col("__retained"), F.col("text")))
-            .drop("__retained")
+            .drop("__retained", "__rewritten")
             .localCheckpoint()
         )
+        n_line_deduped = rewritten.get["n"]
 
     n_perplexity = 0
     if lm_store_path is not None:
@@ -214,9 +223,10 @@ def ingest_corpus_shard(
             .where(~F.col("keep"))
             .select("doc_id")
         )
-        before = passed.count()
-        passed = passed.join(too_weird, "doc_id", "left_anti").localCheckpoint()
-        n_perplexity = before - passed.count()
+        passed, n_after = _checkpoint_counted(
+            passed.join(too_weird, "doc_id", "left_anti")
+        )
+        n_perplexity, n_current = n_current - n_after, n_after
 
     n_dsir = 0
     if dsir_store_path is not None:
@@ -237,9 +247,10 @@ def ingest_corpus_shard(
             .where(~F.col("keep"))
             .select("doc_id")
         )
-        before = passed.count()
-        passed = passed.join(off_domain, "doc_id", "left_anti").localCheckpoint()
-        n_dsir = before - passed.count()
+        passed, n_after = _checkpoint_counted(
+            passed.join(off_domain, "doc_id", "left_anti")
+        )
+        n_dsir, n_current = n_current - n_after, n_after
 
     n_repetition = 0
     if max_repeated_fraction is not None:
@@ -252,23 +263,27 @@ def ingest_corpus_shard(
             .where(F.col("repeated_fraction") > max_repeated_fraction)
             .select("doc_id")
         )
-        before = passed.count()
-        passed = passed.join(repetitive, "doc_id", "left_anti").localCheckpoint()
-        n_repetition = before - passed.count()
+        passed, n_after = _checkpoint_counted(
+            passed.join(repetitive, "doc_id", "left_anti")
+        )
+        n_repetition, n_current = n_current - n_after, n_after
 
     verdicts = dedup_incremental(
         passed.select("doc_id", "text"), store_path, est_threshold,
         ingest_id=ingest_id,
     )
-    dup_ids = verdicts.select("doc_id").distinct()
-    survivors = passed.join(dup_ids, "doc_id", "left_anti").withColumn(
-        "split", split_assignment(F.col("doc_id"))
-    )
-    write_corpus(survivors, corpus_path, mode=corpus_mode)
     # Counted from the shard-sized lineage (checkpointed shard +
     # verdicts), NOT by re-reading the corpus: per-shard cost must stay
-    # O(|shard|), independent of how big the corpus has grown.
-    n_published = survivors.count()
+    # O(|shard|), independent of how big the corpus has grown. The one
+    # checkpoint feeds the corpus write and the BM25 fold. The dup ids
+    # are at most one long per shard doc, so they broadcast: no shuffle
+    # of the shard for the anti-join.
+    survivors, n_published = _checkpoint_counted(
+        passed.join(
+            F.broadcast(verdicts.select("doc_id")), "doc_id", "left_anti"
+        ).withColumn("split", split_assignment(F.col("doc_id")))
+    )
+    write_corpus(survivors, corpus_path, mode=corpus_mode)
     n_indexed = 0
     if bm25_index_path is not None and n_published:
         # Published docs also become searchable: fold them into the
@@ -302,8 +317,7 @@ def ingest_corpus_shard(
         "dsir_filtered": n_dsir,
         "line_deduped": n_line_deduped,
         "repetition_filtered": n_repetition,
-        "duplicate": n_passed - n_resampled_out - n_perplexity - n_dsir
-        - n_repetition - n_published,
+        "duplicate": n_current - n_published,
         "published": n_published,
         "indexed": n_indexed,
     }

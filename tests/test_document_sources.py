@@ -168,6 +168,7 @@ def test_ingest_corpus_shard_curation_stages(spark, tmp_path):
     from datapoints_csv_extractor_spark.sources.documents import (
         read_documents_jsonl,
     )
+    from datapoints_csv_extractor_spark.operators.dedup import dedup_incremental
 
     corpus = str(tmp_path / "corpus")
     store = str(tmp_path / "bandstore")
@@ -223,6 +224,178 @@ def test_ingest_corpus_shard_curation_stages(spark, tmp_path):
     )
     assert stats2["published"] == 0
     assert stats2["duplicate"] == 2
+
+    # Every optional gate at once: the ledger (read off the checkpoint
+    # jobs' observations) equals plain count()s of the same stages.
+    docs, stored = _all_gates_docs()
+    shard = tmp_path / "all_gates.jsonl"
+    shard.write_text("\n".join(json.dumps(d) for d in docs))
+    frame = read_documents_jsonl(spark, str(shard))
+    lm, dsir = str(tmp_path / "lm"), str(tmp_path / "dsir")
+    _build_gate_stores(spark, frame, lm, dsir)
+    store_all = str(tmp_path / "store_all")
+    dedup_incremental(
+        spark.createDataFrame([(900, stored)], "doc_id long, text string"),
+        store_all, ingest_id="seed",
+    )
+    gates = dict(
+        classifier_threshold=-1.0,
+        resample_thresholds={"crawl": "80"},
+        line_dedup_tokens=6,
+        lm_store_path=lm,
+        max_ppl=25.0,
+        dsir_store_path=dsir,
+        min_dsir_logweight=-5.0,
+        max_repeated_fraction=0.5,
+    )
+    all_corpus = str(tmp_path / "corpus_all")
+    stats3 = ingest_corpus_shard(
+        spark, frame, all_corpus, store_all,
+        bm25_index_path=str(tmp_path / "bm25_all"), **gates,
+    )
+    expected = _count_oracle(spark, frame, **gates)
+    published = spark.read.parquet(all_corpus).count()
+    expected["duplicate"] = expected.pop("deduped_input") - published
+    expected["published"] = expected["indexed"] = published
+    assert stats3 == expected
+    assert all(v > 0 for v in stats3.values()), stats3
+
+
+_IN_DOMAIN = (
+    "river stone bridge market harvest lantern orchard meadow valley "
+    "village baker miller weaver candle winter summer festival song "
+    "road hill"
+).split()
+_OFF_DOMAIN = (
+    "quantum ledger protocol token wallet validator consensus block "
+    "chain hash mining staking oracle bridge gas fee"
+).split()
+
+
+def _all_gates_docs() -> tuple[list[dict], str]:
+    """A shard on which every optional ingest gate drops or rewrites
+    at least one document, plus the text of a document the band store
+    already holds (doc 34 repeats it):
+
+    - 30 fails the quality gate; 31 carries an e-mail address;
+    - ``crawl`` docs are resampled;
+    - 33 opens with doc 1's first six-token line (line dedup);
+    - 32 is gibberish the LM has never seen (perplexity);
+    - 35 is prose from another domain (DSIR);
+    - 40-42 share a 14-word phrase (repetition).
+    """
+    import random
+
+    rng = random.Random(11)
+
+    def prose(n, vocab=_IN_DOMAIN):
+        return " ".join(rng.choice(vocab) for _ in range(n))
+
+    docs = [
+        {"doc_id": i, "text": prose(rng.randint(20, 40)),
+         "source": "crawl" if i % 3 == 0 else "keepall"}
+        for i in range(1, 25)
+    ]
+    stored, shared = prose(30), prose(14)
+    first_line = " ".join(docs[0]["text"].split()[:6])
+    docs += [
+        {"doc_id": 30, "text": "tiny!!", "source": "keepall"},
+        {"doc_id": 31, "text": prose(25) + " mail bob@example.org", "source": "keepall"},
+        {"doc_id": 32, "text": "zzq vrk plm wqx jjt nnb qqy zpw mlk rrv ttx bbn "
+                               "qpa wos edr fgt hyu jki olz xcv", "source": "keepall"},
+        {"doc_id": 33, "text": first_line + " " + prose(20), "source": "keepall"},
+        {"doc_id": 34, "text": stored, "source": "keepall"},
+        {"doc_id": 35, "text": prose(30, _OFF_DOMAIN), "source": "keepall"},
+    ]
+    docs += [
+        {"doc_id": 40 + j, "text": prose(j + 1) + " " + shared, "source": "keepall"}
+        for j in range(3)
+    ]
+    return docs, stored
+
+
+def _build_gate_stores(spark, frame, lm_path, dsir_path) -> None:
+    """The LM knows every doc but the gibberish one; the DSIR target
+    also leaves out the off-domain one."""
+    from datapoints_csv_extractor_spark.operators.curation import build_dsir_store
+    from datapoints_csv_extractor_spark.operators.textops import build_lm_store
+
+    docs = frame.select("doc_id", "text")
+    build_lm_store(docs.where(F.col("doc_id") != 32), lm_path)
+    build_dsir_store(docs, docs.where(~F.col("doc_id").isin(32, 35)), dsir_path)
+
+
+def _count_oracle(
+    spark, frame, *, classifier_threshold, resample_thresholds,
+    line_dedup_tokens, lm_store_path, max_ppl, dsir_store_path,
+    min_dsir_logweight, max_repeated_fraction,
+) -> dict[str, int]:
+    """The ingest plan's pre-dedup stages, each counted with its own
+    count(): the ledger every shard must reproduce. ``deduped_input``
+    is the number of documents that reach the incremental dedup."""
+    from datapoints_csv_extractor_spark.operators.curation import (
+        dsir_score_from_store,
+        line_dedup_reassemble,
+        pii_counts,
+        pii_redact,
+        quality_classifier_score,
+        repeated_spans,
+    )
+    from datapoints_csv_extractor_spark.operators.textops import (
+        md5_prefix_bucket,
+        perplexity_score_from_store,
+        quality_passes,
+        tokens,
+    )
+
+    c = pii_counts(F.col("text"))
+    n_pii = frame.where((c["n_emails"] + c["n_phones"] + c["n_ips"]) > 0).count()
+    docs = pii_redact(frame).drop("text").withColumnRenamed("text_redacted", "text")
+    passed = docs.where(
+        quality_passes(F.col("text"))
+        & (quality_classifier_score(tokens(F.col("text"))) >= classifier_threshold)
+    )
+    n_passed = passed.count()
+    bound = F.lit("zz")
+    for src, thr in resample_thresholds.items():
+        bound = F.when(F.col("source") == src, F.lit(thr)).otherwise(bound)
+    sampled = passed.where(md5_prefix_bucket(F.col("doc_id")) < bound)
+    n_sampled = sampled.count()
+    lines = line_dedup_reassemble(
+        sampled.select("doc_id", "text"), tokens_per_line=line_dedup_tokens
+    )
+    n_rewritten = lines.where(F.col("n_kept_lines") < F.col("n_lines")).count()
+    docs = (
+        sampled.join(lines.select("doc_id", "retained_text"), "doc_id", "left")
+        .withColumn("text", F.coalesce("retained_text", "text"))
+        .drop("retained_text")
+    )
+    dropped = {}
+    for name, rejected in (
+        ("perplexity_filtered", lambda d: perplexity_score_from_store(
+            d.select("doc_id", "text"), lm_store_path, keep_below_ppl=max_ppl
+        ).where(~F.col("keep"))),
+        ("dsir_filtered", lambda d: dsir_score_from_store(
+            d.select("doc_id", "text"), dsir_store_path,
+            min_log_weight=min_dsir_logweight,
+        ).where(~F.col("keep"))),
+        ("repetition_filtered", lambda d: repeated_spans(
+            d.withColumn("toks", tokens(F.col("text")))
+        ).where(F.col("repeated_fraction") > max_repeated_fraction)),
+    ):
+        before = docs.count()
+        docs = docs.join(rejected(docs).select("doc_id"), "doc_id", "left_anti")
+        dropped[name] = before - docs.count()
+    n_received = frame.count()
+    return {
+        "received": n_received,
+        "pii_redacted": n_pii,
+        "low_quality": n_received - n_passed,
+        "resampled_out": n_passed - n_sampled,
+        "line_deduped": n_rewritten,
+        **dropped,
+        "deduped_input": docs.count(),
+    }
 
 
 def test_ingest_corpus_shard_classifier_gate(spark, tmp_path):
@@ -342,6 +515,116 @@ def test_ingest_folds_published_docs_into_bm25_store(spark, tmp_path):
     assert s2b["indexed"] == 0
     hits = bm25_topk_from_index(spark, idx, ["glaciers"], k=5).collect()
     assert len(hits) == 1
+
+
+# Jobs the second shard of the fixture below runs with PII redaction,
+# the quality gate, the band store and BM25 on: one checkpoint for the
+# gates, the band-store fold (signatures, band joins, three table
+# writes), one checkpoint for the survivors, the corpus write and the
+# BM25 postings write. Counting with a separate count() per gate and
+# re-running the survivors lineage per consumer took 48.
+MAX_SHARD_JOBS = 23
+
+
+def test_corpus_shard_job_count(spark, tmp_path):
+    """Scale guard in the style of test_batch_consumers_do_not_rescan_csv:
+    a shard's counts ride on the jobs that already materialise its
+    rows, so the job count of a whole shard stays at the measured
+    figure (each job is a driver round-trip, which dominates small
+    shards)."""
+    import uuid
+
+    from datapoints_csv_extractor_spark.plans.corpus_ingest import (
+        ingest_corpus_shard,
+    )
+
+    docs, _ = _all_gates_docs()
+    paths = []
+    for k, part in enumerate((docs[:12], docs[12:])):
+        p = tmp_path / f"jobs{k}.jsonl"
+        p.write_text("\n".join(json.dumps(d) for d in part))
+        paths.append(str(p))
+
+    def ingest(k):
+        return ingest_corpus_shard(
+            spark, read_documents_jsonl(spark, paths[k]),
+            str(tmp_path / "corpus"), str(tmp_path / "bands"),
+            ingest_id=f"jobs{k}", bm25_index_path=str(tmp_path / "bm25"),
+        )
+
+    ingest(0)
+    sc = spark.sparkContext
+    group = f"corpus-shard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "second corpus shard")
+    try:
+        stats = ingest(1)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert stats["pii_redacted"] and stats["low_quality"] and stats["indexed"]
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= MAX_SHARD_JOBS, n_jobs
+
+
+def _ingest_within(spark, seconds, *args, **kwargs):
+    """Run ingest_corpus_shard on a daemon thread: an Observation whose
+    job never ran would block its reader forever, so a hang fails the
+    test instead of stalling the suite."""
+    import threading
+
+    from datapoints_csv_extractor_spark.plans.corpus_ingest import (
+        ingest_corpus_shard,
+    )
+
+    out = {}
+
+    def run():
+        try:
+            out["stats"] = ingest_corpus_shard(spark, *args, **kwargs)
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), "ingest_corpus_shard did not return"
+    if "error" in out:
+        raise out["error"]
+    return out["stats"]
+
+
+def test_ingest_empty_and_all_rejected_shards(spark, tmp_path):
+    """An empty shard and a shard whose documents all fail the quality
+    gate return promptly, with every count but received/low_quality
+    at zero and nothing published or indexed."""
+    zero = {
+        "received": 0, "pii_redacted": 0, "low_quality": 0,
+        "resampled_out": 0, "perplexity_filtered": 0, "dsir_filtered": 0,
+        "line_deduped": 0, "repetition_filtered": 0, "duplicate": 0,
+        "published": 0, "indexed": 0,
+    }
+    empty = tmp_path / "empty.jsonl"
+    empty.write_text("")
+    rejected = tmp_path / "rejected.jsonl"
+    rejected.write_text("\n".join(
+        json.dumps({"doc_id": i, "text": "no!!", "source": "s"}) for i in range(5)
+    ))
+    for name, shard, expected in (
+        ("empty", read_documents_jsonl(spark, str(empty)), zero),
+        ("empty_frame", spark.createDataFrame(
+            [], "doc_id long, text string, lang string, source string"
+        ), zero),
+        ("rejected", read_documents_jsonl(spark, str(rejected)),
+         {**zero, "received": 5, "low_quality": 5}),
+    ):
+        stats = _ingest_within(
+            spark, 300, shard,
+            str(tmp_path / "corpus"), str(tmp_path / "bands"),
+            ingest_id=name, bm25_index_path=str(tmp_path / "bm25"),
+            line_dedup_tokens=4, max_repeated_fraction=0.5,
+        )
+        assert stats == expected, name
 
 
 def test_ingest_without_ingest_id_indexes_every_run(spark, tmp_path):

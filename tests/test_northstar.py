@@ -1100,6 +1100,37 @@ def test_dedup_incremental_replay_is_idempotent(spark, tmp_path):
     assert D._read_manifest(store) == ["batch_0"]
 
 
+def test_band_store_schema_matches_shard_frames(spark, tmp_path):
+    """dedup_incremental reads the committed band-store tables with the
+    schema of the shard's own frames instead of inferring it. Pin that
+    the two agree: a writer-side type change would otherwise read back
+    as silent nulls."""
+    store = str(tmp_path / "bandstore")
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+            (2, "alpha beta gamma delta epsilon zeta eta theta iota lambda"),
+        ],
+        "doc_id long, text string",
+    )
+    D.dedup_incremental(docs, store, ingest_id="seed")
+    sig = D.minhash_signatures_df(docs)
+    bands = D.signature_bands(sig)
+    counts = bands.groupBy("band_id", "band_hash").agg(F.count("*").alias("n"))
+    for table, frame in (
+        ("signatures", sig), ("bands", bands), ("bucket_counts", counts)
+    ):
+        path = f"{store}/{table}/ingest=seed"
+        inferred = spark.read.parquet(path)
+        assert [(f.name, f.dataType) for f in inferred.schema] == [
+            (f.name, f.dataType) for f in frame.schema
+        ], table
+        given = spark.read.schema(frame.schema).parquet(path)
+        assert sorted(map(tuple, given.collect())) == sorted(
+            map(tuple, inferred.collect())
+        ), table
+
+
 def test_ivf_incremental_shard_assignment(spark, tmp_path):
     """A shard appended via assign_to_ivf_index must be queryable from
     the stored index with no retraining: near-dups of the query planted
