@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.operators.relational import load
 from datapoints_csv_extractor_spark.operators.textops import tokens
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 # --------------------------------------------------------------------------
 # PII detection / redaction
@@ -1615,7 +1616,6 @@ def build_dsir_store(
     carrying the smoothed default ratio for buckets neither corpus
     exhibited (a new shard can hash there; the add-1 model still
     defines its ratio)."""
-    import json
     import math
     import os
 
@@ -1650,18 +1650,15 @@ def build_dsir_store(
     default = round(
         math.log(1.0 / (tt + n_buckets)) - math.log(1.0 / (rt + n_buckets)), 6
     )
-    tmp = os.path.join(store_path, "meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "n_buckets": n_buckets,
-                "default_log_ratio": default,
-                "target_total": tt,
-                "raw_total": rt,
-            },
-            fh,
-        )
-    os.replace(tmp, os.path.join(store_path, "meta.json"))
+    store_commit.write_json(
+        os.path.join(store_path, "meta.json"),
+        {
+            "n_buckets": n_buckets,
+            "default_log_ratio": default,
+            "target_total": tt,
+            "raw_total": rt,
+        },
+    )
 
 
 def dsir_score_from_store(
@@ -1675,12 +1672,10 @@ def dsir_score_from_store(
     ``min_log_weight`` adds the gate verdict (keep = scores at least
     that log-weight; the ingest plan's threshold form of Gumbel
     resampling)."""
-    import json
     import os
 
     spark = docs.sparkSession
-    with open(os.path.join(store_path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = store_commit.read_json(os.path.join(store_path, "meta.json"))
     ratio = spark.read.parquet(os.path.join(store_path, "ratios"))
     default = F.lit(str(meta["default_log_ratio"])).cast("decimal(18,6)")
     pairs = _dsir_bucket_pairs(docs, meta["n_buckets"])

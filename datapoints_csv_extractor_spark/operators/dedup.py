@@ -37,6 +37,7 @@ from datapoints_csv_extractor_spark.operators.skew import (
     spread_scan,
 )
 from datapoints_csv_extractor_spark.operators.textops import tokens
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 MERSENNE_P = (1 << 31) - 1
 # Stop-shingle / hot-bucket caps (CCNet/Gopher practice): a shingle
@@ -1035,10 +1036,11 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   <store>/bands/ingest=<id>/               (doc_id, band_id, band_hash)
 #   <store>/bucket_counts/ingest=<id>/       that ingest's band counts
 #
-# Commit protocol: an ingest writes its three directories (Spark
-# overwrite — a replay of the same ingest id rewrites the same dirs),
-# then adds its id to the manifest via write-temp + atomic rename,
-# serialized by the catalog lock. Readers resolve the manifest first
+# Commit protocol (sinks/store_commit.py): an ingest writes its three
+# directories (Spark overwrite — a replay of the same ingest id
+# rewrites the same dirs), then adds its id to the manifest with
+# ``store_commit.update_json`` (locked read-modify-write, atomic
+# replace). Readers resolve the manifest first
 # and read ONLY committed directories, so a crash mid-fold leaves
 # garbage dirs (cleaned by compaction) but never a half-visible
 # ingest, and re-running an ingest id is idempotent — the properties
@@ -1054,64 +1056,33 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # not over the band data.
 
 
-def _manifest_path(store_path: str) -> str:
+EMPTY_MANIFEST = {"ingests": [], "deletes": []}
+
+
+def manifest_path(store_path: str) -> str:
+    """The manifest of a manifest-backed store (band store, IVF
+    assignments, IVF-PQ codes, NS vocabulary): ``ingests`` (committed
+    ingest ids) and ``deletes`` (committed tombstone-batch ids), read
+    and committed through ``sinks/store_commit.py`` with
+    ``EMPTY_MANIFEST`` as the default."""
     import os
 
     return os.path.join(store_path, "manifest.json")
 
 
-def _read_manifest_full(store_path: str) -> dict:
-    """Whole manifest with defaults: ``ingests`` (committed ingest
-    ids) and ``deletes`` (committed tombstone-batch ids). Pre-tombstone
-    manifests read with an empty ``deletes`` list."""
-    import json
-    import os
-
-    p = _manifest_path(store_path)
-    if not os.path.exists(p):
-        return {"ingests": [], "deletes": []}
-    with open(p) as f:
-        m = json.load(f)
-    m.setdefault("ingests", [])
-    m.setdefault("deletes", [])
-    return m
-
-
 def _read_manifest(store_path: str) -> list[str]:
-    return _read_manifest_full(store_path)["ingests"]
+    return store_commit.read_json(manifest_path(store_path), EMPTY_MANIFEST)[
+        "ingests"
+    ]
 
 
-def _commit_manifest_full(store_path: str, mutate) -> dict:
-    """Read-modify-write the manifest under the exclusive catalog lock
-    (two concurrent committers must not lose each other's ingest), with
-    the write itself temp-file + atomic-rename so readers always see a
-    complete manifest. ``mutate(dict) -> dict`` produces the new
-    manifest."""
-    import json
-    import os
-    import uuid
-
-    from datapoints_csv_extractor_spark.sinks.catalog_store import catalog_lock
-
-    os.makedirs(store_path, exist_ok=True)
-    with catalog_lock(_manifest_path(store_path)):
-        manifest = mutate(_read_manifest_full(store_path))
-        tmp = _manifest_path(store_path) + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, _manifest_path(store_path))
-    return manifest
-
-
-def _commit_manifest(store_path: str, mutate) -> list[str]:
-    """Ingest-list commit (``mutate(list) -> list``); preserves the
-    tombstone ledger."""
-
-    def _m(manifest: dict) -> dict:
-        manifest["ingests"] = mutate(manifest["ingests"])
-        return manifest
-
-    return _commit_manifest_full(store_path, _m)["ingests"]
+def with_ingest(ingest_id: str):
+    """Manifest mutation listing ``ingest_id`` once (a replayed commit
+    is a no-op), for ``store_commit.update_json``."""
+    return lambda m: (
+        m if ingest_id in m["ingests"]
+        else {**m, "ingests": m["ingests"] + [ingest_id]}
+    )
 
 
 def read_band_store(
@@ -1141,7 +1112,9 @@ def store_tombstones(
     ``read_band_store``'s crash-invisibility."""
     import os
 
-    deletes = _read_manifest_full(store_path)["deletes"]
+    deletes = store_commit.read_json(
+        manifest_path(store_path), EMPTY_MANIFEST
+    )["deletes"]
     if not deletes:
         return None
     return (
@@ -1171,7 +1144,7 @@ def delete_from_store(
 
     Tombstones are a delete-side mirror of ingests: the batch writes
     ``tombstones/delete=<id>/`` then commits its id to the manifest's
-    ``deletes`` ledger (same lock + atomic rename). Query paths
+    ``deletes`` ledger (``store_commit.update_json``). Query paths
     anti-join against the committed tombstone set; ``compact_*``
     folds them in physically (rows dropped, ledger cleared). Replay
     of an already-committed ``delete_id`` is a no-op (returns False)
@@ -1183,7 +1156,8 @@ def delete_from_store(
     import uuid
 
     delete_id = delete_id or uuid.uuid4().hex[:12]
-    if delete_id in _read_manifest_full(store_path)["deletes"]:
+    path = manifest_path(store_path)
+    if delete_id in store_commit.read_json(path, EMPTY_MANIFEST)["deletes"]:
         return False
     df = (
         ids
@@ -1194,12 +1168,12 @@ def delete_from_store(
         os.path.join(store_path, "tombstones", f"delete={delete_id}")
     )
 
-    def _m(manifest: dict) -> dict:
-        if delete_id not in manifest["deletes"]:
-            manifest["deletes"] = manifest["deletes"] + [delete_id]
-        return manifest
-
-    _commit_manifest_full(store_path, _m)
+    store_commit.update_json(
+        path,
+        lambda m: m if delete_id in m["deletes"]
+        else {**m, "deletes": m["deletes"] + [delete_id]},
+        EMPTY_MANIFEST,
+    )
     return True
 
 
@@ -1361,9 +1335,8 @@ def dedup_incremental(
             df.write.mode("overwrite").parquet(
                 os.path.join(store_path, table, f"ingest={ingest_id}")
             )
-        _commit_manifest(
-            store_path,
-            lambda ids: ids if ingest_id in ids else ids + [ingest_id],
+        store_commit.update_json(
+            manifest_path(store_path), with_ingest(ingest_id), EMPTY_MANIFEST
         )
     return verdicts
 
@@ -1610,7 +1583,7 @@ def band_store_stats(spark: SparkSession, store_path: str) -> DataFrame:
     import glob as _glob
     import os
 
-    manifest = _read_manifest_full(store_path)
+    manifest = store_commit.read_json(manifest_path(store_path), EMPTY_MANIFEST)
     rows = []
     for i in manifest["ingests"]:
         sig_dir = os.path.join(store_path, "signatures", f"ingest={i}")

@@ -26,7 +26,15 @@ import tempfile
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datapoints_csv_extractor_spark.operators.dedup import (
+    EMPTY_MANIFEST,
+    _read_manifest,
+    manifest_path,
+    store_tombstones,
+    with_ingest,
+)
 from datapoints_csv_extractor_spark.operators.relational import load
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 
 def _f64_lit(values) -> Column:
@@ -641,11 +649,6 @@ def read_ivf_assignments(spark: SparkSession, index_dir: str) -> DataFrame:
     (top-k serving, cell balance, refresh, semantic dedup) stops
     seeing deleted vectors immediately; ``compact_ivf_store`` later
     drops the rows physically."""
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest,
-        store_tombstones,
-    )
-
     base = os.path.join(index_dir, "assignments")
     ingests = _read_manifest(index_dir)
     if not ingests:
@@ -667,15 +670,12 @@ def _write_ivf_ingest(assigned: DataFrame, index_dir: str, ingest_id: str) -> No
     rows (cell-clustered, one file per cell) under a private
     ``ingest=<id>`` directory — overwrite, so a replayed id rewrites
     the same bytes — then publish it in the manifest (idempotent:
-    commit-at-most-once under the catalog lock)."""
-    from datapoints_csv_extractor_spark.operators.dedup import _commit_manifest
-
+    commit-at-most-once, ``store_commit.update_json``)."""
     assigned.repartition(F.col("cell")).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(os.path.join(index_dir, "assignments", f"ingest={ingest_id}"))
-    _commit_manifest(
-        index_dir,
-        lambda ids: ids if ingest_id in ids else ids + [ingest_id],
+    store_commit.update_json(
+        manifest_path(index_dir), with_ingest(ingest_id), EMPTY_MANIFEST
     )
 
 
@@ -726,14 +726,13 @@ def build_ivf_index(
     # A REBUILD over an existing store replaces it wholesale: the
     # manifest resets to just the fresh base fold and superseded
     # ingest directories are garbage-collected.
-    from datapoints_csv_extractor_spark.operators.dedup import _commit_manifest
-
-    _commit_manifest(index_dir, lambda ids: ["base"])
-    import shutil
-
-    for d in os.scandir(os.path.join(index_dir, "assignments")):
-        if d.is_dir() and d.name.startswith("ingest=") and d.name != "ingest=base":
-            shutil.rmtree(d.path, ignore_errors=True)
+    store_commit.update_json(
+        manifest_path(index_dir), lambda m: {**m, "ingests": ["base"]},
+        EMPTY_MANIFEST,
+    )
+    store_commit.sweep(
+        os.path.join(index_dir, "assignments"), "ingest=", {"ingest=base"}
+    )
     return centroids
 
 
@@ -819,15 +818,15 @@ def ann_ivf_topk(
     index_dir = _default_index_dir(sf_dir)
     marker = os.path.join(index_dir, "manifest.json")
     if not os.path.exists(marker):
-        # Build into a private dir, then ATOMICALLY rename into the
+        # Build into a private dir, then ATOMICALLY publish it into the
         # cache slot: two concurrent processes (bench + driver on the
         # same sf_dir) must never interleave writes into one index —
-        # exactly one rename wins, the loser discards its build and
+        # exactly one publish wins, the loser discards its build and
         # reads the winner's (identical, deterministic training).
         staging = f"{index_dir}.build.{uuid.uuid4().hex[:8]}"
         build_ivf_index(e, staging)
         try:
-            os.rename(staging, index_dir)
+            store_commit.publish_dir(staging, index_dir)
         except OSError:
             import shutil
 
@@ -892,8 +891,6 @@ def ivf_cell_balance(
     """
     import glob as _glob
 
-    from datapoints_csv_extractor_spark.operators.dedup import _read_manifest
-
     counts = {
         r["cell"]: r["n"]
         for r in read_ivf_assignments(spark, index_dir)
@@ -944,13 +941,7 @@ def refresh_ivf_index(
     because the corpus outgrew the cell budget (not just drifted).
     Returns the new centroids.
     """
-    import shutil
     import uuid
-
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest_full,
-        _read_manifest_full,
-    )
 
     if n_centroids is None:
         n_centroids = len(read_ivf_centroids(spark, index_dir))
@@ -959,7 +950,10 @@ def refresh_ivf_index(
     # fold excludes at least these deletes — the refresh doubles as a
     # tombstone fold and clears exactly this snapshot below (a delete
     # committed mid-refresh stays listed).
-    deletes_snapshot = set(_read_manifest_full(index_dir)["deletes"])
+    manifest = manifest_path(index_dir)
+    deletes_snapshot = set(
+        store_commit.read_json(manifest, EMPTY_MANIFEST)["deletes"]
+    )
     stored = read_ivf_assignments(spark, index_dir).drop("cell").localCheckpoint()
     centroids = train_ivf_centroids(stored, n_centroids, n_train_iters)
     refresh_id = f"refresh{uuid.uuid4().hex[:8]}"
@@ -982,17 +976,15 @@ def refresh_ivf_index(
         m["deletes"] = [d for d in m["deletes"] if d not in deletes_snapshot]
         return m
 
-    final = _commit_manifest_full(index_dir, _swap)
-    kept = set(final["ingests"])
-    kept_deletes = set(final["deletes"])
-    for d in os.scandir(os.path.join(index_dir, "assignments")):
-        if d.is_dir() and d.name.startswith("ingest=") and d.name.removeprefix("ingest=") not in kept:
-            shutil.rmtree(d.path, ignore_errors=True)
-    tomb_root = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb_root):
-        for d in os.scandir(tomb_root):
-            if d.is_dir() and d.name.removeprefix("delete=") not in kept_deletes:
-                shutil.rmtree(d.path, ignore_errors=True)
+    final = store_commit.update_json(manifest, _swap, EMPTY_MANIFEST)
+    store_commit.sweep(
+        os.path.join(index_dir, "assignments"), "ingest=",
+        {f"ingest={i}" for i in final["ingests"]},
+    )
+    store_commit.sweep(
+        os.path.join(index_dir, "tombstones"), "delete=",
+        {f"delete={d}" for d in final["deletes"]},
+    )
     return centroids
 
 
@@ -1352,15 +1344,14 @@ def build_lsh_index(
     cells. ``meta`` records dim/n_bits so the query path derives the
     identical hyperplane family.
     """
-    import json
-
     dim = len(_require_row(e.select("embedding").first(), "any embedding row")[0])
     assigned = e.withColumn("bucket", lsh_bucket(F.col("embedding"), dim, n_bits))
     assigned.write.mode("overwrite").partitionBy("bucket").parquet(
         os.path.join(index_dir, "assignments")
     )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump({"dim": dim, "n_bits": n_bits}, f)
+    store_commit.write_json(
+        os.path.join(index_dir, "meta.json"), {"dim": dim, "n_bits": n_bits}
+    )
 
 
 def ann_lsh_topk_from_index(
@@ -1375,10 +1366,7 @@ def ann_lsh_topk_from_index(
     partitions (bucket and its one-bit neighbors — n_bits+1 of 2^n_bits
     partitions), and exactly re-score. No banding work over the corpus
     appears in the plan."""
-    import json
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store_commit.read_json(os.path.join(index_dir, "meta.json"))
     dim, n_bits = meta["dim"], meta["n_bits"]
     if len(query_vec) != dim:
         raise ValueError(f"query dim {len(query_vec)} != index dim {dim}")
@@ -1562,8 +1550,6 @@ def semantic_dedup_incremental(
     """
     import uuid
 
-    from datapoints_csv_extractor_spark.operators.dedup import _read_manifest
-
     spark = new_vecs.sparkSession
     ingest_id = ingest_id or uuid.uuid4().hex[:12]
     centroids = read_ivf_centroids(spark, index_dir)
@@ -1588,10 +1574,6 @@ def semantic_dedup_incremental(
     else:
         # Pre-manifest store (backward compat): read the flat layout.
         stored_all = spark.read.parquet(base)
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        store_tombstones,
-    )
-
     dead = store_tombstones(spark, index_dir, id_col="vec_id")
     if dead is not None:
         # Deleted/redacted vectors must stop acting as dup
@@ -1934,14 +1916,14 @@ def build_pq_index(
     """Build-once half of the PQ lifecycle: train codebooks, encode
     the corpus, persist codes parquet + codebook meta. The codes table
     is the only per-vector state (m ints/vector)."""
-    import json
-
     codebooks = train_pq_codebooks(e, m=m, k=k, n_iters=n_iters)
     pq_encode(e, codebooks).write.mode("overwrite").parquet(
         os.path.join(index_dir, "codes")
     )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump({"m": m, "k": k, "codebooks": codebooks}, f)
+    store_commit.write_json(
+        os.path.join(index_dir, "meta.json"),
+        {"m": m, "k": k, "codebooks": codebooks},
+    )
 
 
 def ann_pq_topk_from_index(
@@ -1956,10 +1938,7 @@ def ann_pq_topk_from_index(
     """Query-once half: load codebooks (parameter-sized), ADC-scan the
     stored codes, optionally exact-re-rank against ``source``. No
     training stage appears in the query plan."""
-    import json
-
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store_commit.read_json(os.path.join(index_dir, "meta.json"))
     encoded = spark.read.parquet(os.path.join(index_dir, "codes"))
     if source is None:
         return pq_topk_df(
@@ -2272,8 +2251,6 @@ def build_ivfpq_index(
     codes parquet PARTITIONED BY CELL (so serving inherits the IVF
     store's file-listing-time pruning) plus a parameter-sized meta
     with centroids + codebooks."""
-    import json
-
     centroids = train_ivf_centroids(e, n_centroids, n_iters)
     assigned = _spread(
         e.select("vec_id", "label", "embedding")
@@ -2320,10 +2297,6 @@ def build_ivfpq_index(
                 }
             )
 
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest,
-    )
-
     (
         assigned.mapInPandas(
             _enc, "vec_id long, label int, cell int, codes array<int>"
@@ -2333,32 +2306,29 @@ def build_ivfpq_index(
         .partitionBy("cell")
         .parquet(os.path.join(index_dir, "codes", "ingest=base"))
     )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_centroids": n_centroids,
-                "m": m,
-                "k": k,
-                "centroids": centroids,
-                "codebooks": codebooks,
-            },
-            f,
-        )
+    store_commit.write_json(
+        os.path.join(index_dir, "meta.json"),
+        {
+            "n_centroids": n_centroids,
+            "m": m,
+            "k": k,
+            "centroids": centroids,
+            "codebooks": codebooks,
+        },
+    )
     # Same manifest protocol as the IVF assignment store: the codes
     # directory is ingest-foldable (append_ivfpq_shard), tombstonable
     # (delete_from_store on vec_id), and compactable.
-    _commit_manifest(index_dir, lambda ids: ["base"])
+    store_commit.update_json(
+        manifest_path(index_dir), lambda m: {**m, "ingests": ["base"]},
+        EMPTY_MANIFEST,
+    )
 
 
 def _read_ivfpq_codes(spark: SparkSession, index_dir: str) -> DataFrame:
     """Committed, tombstone-filtered codes (``ingest`` dropped,
     ``cell`` kept as the pruning partition column) — the exact reader
     contract of ``read_ivf_assignments``, on the codes table."""
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest,
-        store_tombstones,
-    )
-
     base = os.path.join(index_dir, "codes")
     ingests = _read_manifest(index_dir)
     if not ingests:
@@ -2386,22 +2356,15 @@ def append_ivfpq_shard(
     at-least-once contract as every other store fold. Codebook drift
     from corpus growth is the offline refresh's business (rebuild via
     ``build_ivfpq_index``), mirroring ``refresh_ivf_index``."""
-    import json
     import uuid
 
     import numpy as np
-
-    from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest,
-        _read_manifest,
-    )
 
     spark = e_new.sparkSession
     ingest_id = ingest_id or uuid.uuid4().hex[:12]
     if ingest_id in _read_manifest(index_dir):
         return False
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store_commit.read_json(os.path.join(index_dir, "meta.json"))
     centroids, codebooks = meta["centroids"], meta["codebooks"]
     c_arr = np.array(centroids, dtype=np.float64)
     c_norm = np.sqrt((c_arr * c_arr).sum(axis=1))
@@ -2453,8 +2416,8 @@ def append_ivfpq_shard(
         .partitionBy("cell")
         .parquet(os.path.join(index_dir, "codes", f"ingest={ingest_id}"))
     )
-    _commit_manifest(
-        index_dir, lambda ids: ids if ingest_id in ids else ids + [ingest_id]
+    store_commit.update_json(
+        manifest_path(index_dir), with_ingest(ingest_id), EMPTY_MANIFEST
     )
     return True
 
@@ -2476,12 +2439,9 @@ def ann_ivfpq_topk(
     score ONLY those cells' codes — the scan is partition-pruned at
     file listing AND each row costs m element_at lookups, no float
     vector math. Optional exact re-rank against ``source``."""
-    import json
-
     import numpy as np
 
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = store_commit.read_json(os.path.join(index_dir, "meta.json"))
     centroids = meta["centroids"]
     codebooks = meta["codebooks"]
     n_k = meta["k"]
@@ -2845,17 +2805,14 @@ def build_sq_index(e: DataFrame, index_dir: str) -> tuple[list, list]:
     train once, serve forever, like every other quantizer store here.
     The codes table is the only data-sized artifact; params are 2*dim
     doubles. Returns (mins, maxs) for callers encoding new shards."""
-    import json
-    import os
-
     mins, maxs = train_sq_minmax(e)
     sq_encode_df(_spread(e), mins, maxs).write.mode("overwrite").parquet(
         os.path.join(index_dir, "codes")
     )
-    tmp = os.path.join(index_dir, "params.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"mins": mins, "maxs": maxs}, fh)
-    os.replace(tmp, os.path.join(index_dir, "params.json"))
+    store_commit.write_json(
+        os.path.join(index_dir, "params.json"), {"mins": mins, "maxs": maxs}
+    )
+    store_commit.sweep(index_dir, "codes.", ())
     return mins, maxs
 
 
@@ -2869,15 +2826,11 @@ def ann_sq_topk_from_index(
     """Serve top-k from a persisted SQ8 index: scan codes (the 1-byte-
     per-dim table), decode against the stored params, asymmetric
     cosine vs the raw query, TakeOrdered. Zero training in the plan."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "params.json")) as fh:
-        params = json.load(fh)
+    params = store_commit.read_json(os.path.join(index_dir, "params.json"))
     mins_lit = _f64_lit(params["mins"])
     maxs_lit = _f64_lit(params["maxs"])
     qlit = _f64_lit(float(x) for x in query_vec)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    codes = spark.read.parquet(_sq_codes(index_dir, params))
     dead = _sq_tombstones(spark, index_dir)
     if dead is not None:
         codes = codes.join(F.broadcast(dead), "vec_id", "left_anti")
@@ -2914,6 +2867,13 @@ def delete_from_sq_index(
     )
 
 
+def _sq_codes(index_dir: str, params: dict) -> str:
+    """The committed codes directory: ``params.json`` is the SQ8 commit
+    point, and its ``codes`` entry names the generation (``codes`` when
+    absent, as a fresh build writes it)."""
+    return os.path.join(index_dir, params.get("codes", "codes"))
+
+
 def _sq_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
     import os
 
@@ -2926,28 +2886,29 @@ def _sq_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
 
 
 def compact_sq_index(spark: SparkSession, index_dir: str) -> int:
-    """Fold tombstones out of the SQ8 codes physically (staging dir +
-    atomic swap so readers never see a half-written store) and clear
-    the deletes ledger. Returns rows removed."""
-    import os
+    """Fold tombstones out of the SQ8 codes physically and clear the
+    deletes ledger. The surviving rows land in a new codes generation
+    that ``params.json`` then names — one atomic commit, so readers
+    (and a crash at any point) see the old codes or the new ones.
+    Returns rows removed."""
     import shutil
+    import uuid
 
     dead = _sq_tombstones(spark, index_dir)
     if dead is None:
         return 0
-    codes_dir = os.path.join(index_dir, "codes")
-    codes = spark.read.parquet(codes_dir)
+    params_path = os.path.join(index_dir, "params.json")
+    params = store_commit.read_json(params_path)
+    codes = spark.read.parquet(_sq_codes(index_dir, params))
     before = codes.count()
-    staged = os.path.join(index_dir, "codes.staging")
+    gen = f"codes.{uuid.uuid4().hex[:8]}"
     codes.join(dead, "vec_id", "left_anti").write.mode("overwrite").parquet(
-        staged
+        os.path.join(index_dir, gen)
     )
-    old = os.path.join(index_dir, "codes.old")
-    os.rename(codes_dir, old)
-    os.rename(staged, codes_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    store_commit.update_json(params_path, lambda p: {**p, "codes": gen}, None)
+    store_commit.sweep(index_dir, "codes", {gen})
     shutil.rmtree(os.path.join(index_dir, "deletes"), ignore_errors=True)
-    after = spark.read.parquet(codes_dir).count()
+    after = spark.read.parquet(os.path.join(index_dir, gen)).count()
     return before - after
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.operators.relational import load
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 # Deterministic stopword lists shared verbatim with the SQL oracle.
 STOPWORDS_EN = ["the", "a", "and", "of", "to", "is", "in", "that", "it", "for"]
@@ -1223,26 +1224,10 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_meta_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "meta.json")
-
-
-def _bm25_read_meta(index_dir: str) -> dict:
-    import json
-
-    with open(_bm25_meta_path(index_dir)) as fh:
-        return json.load(fh)
-
-
-def _bm25_commit_meta(index_dir: str, meta: dict) -> None:
-    """Atomic meta cut-over (write temp + rename) — the commit point
-    for every store mutation, same posture as the band-store
+    """The store's meta — the commit point of every mutation, read
+    and committed through ``sinks/store_commit.py`` like the band-store
     manifest."""
-    import json
-
-    tmp = _bm25_meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _bm25_meta_path(index_dir))
+    return os.path.join(index_dir, "meta.json")
 
 
 def _bm25_write_shard(
@@ -1314,8 +1299,9 @@ def build_bm25_index(
     names the seed shard so a replayed seeding ingest (e.g. a
     streaming batch) stays idempotent under its own id."""
     stats = _bm25_write_shard(docs, index_dir, shard_id, n_buckets)
-    _bm25_commit_meta(
-        index_dir, {"n_buckets": n_buckets, "shards": {shard_id: stats}}
+    store_commit.write_json(
+        _bm25_meta_path(index_dir),
+        {"n_buckets": n_buckets, "shards": {shard_id: stats}},
     )
 
 
@@ -1327,15 +1313,18 @@ def append_bm25_shard(
     a shard=<id> directory write, and an atomic meta commit adding
     the shard's stats. Replay-idempotent: a shard id already in meta
     is a no-op (returns False); a crashed previous attempt left an
-    uncommitted directory that the rewrite simply replaces. This is
-    the daily-ingest story the band store and IVF store already have,
-    on the retrieval axis."""
-    meta = _bm25_read_meta(index_dir)
+    uncommitted directory that the rewrite simply replaces. The commit
+    is a locked read-modify-write, so a racing append or compaction
+    keeps its own shards. This is the daily-ingest story the band
+    store and IVF store already have, on the retrieval axis."""
+    path = _bm25_meta_path(index_dir)
+    meta = store_commit.read_json(path)
     if shard_id in meta["shards"]:
         return False
     stats = _bm25_write_shard(docs, index_dir, shard_id, meta["n_buckets"])
-    meta["shards"][shard_id] = stats
-    _bm25_commit_meta(index_dir, meta)
+    store_commit.update_json(
+        path, lambda m: {**m, "shards": m["shards"] | {shard_id: stats}}, None
+    )
     return True
 
 
@@ -1387,9 +1376,9 @@ def delete_from_bm25_index(
     from pyspark.sql import DataFrame as _DF
 
     delete_id = delete_id or uuid.uuid4().hex[:12]
-    meta = _bm25_read_meta(index_dir)
-    deletes = meta.setdefault("deletes", {})
-    if delete_id in deletes:
+    path = _bm25_meta_path(index_dir)
+    meta = store_commit.read_json(path)
+    if delete_id in meta.get("deletes", {}):
         return False
     ids = (
         doc_ids
@@ -1415,8 +1404,12 @@ def delete_from_bm25_index(
         .agg(F.count(F.lit(1)), F.sum("dl"))
         .first()
     )
-    deletes[delete_id] = {"n_docs": n_docs, "dl_sum": dl_sum or 0}
-    _bm25_commit_meta(index_dir, meta)
+    stats = {"n_docs": n_docs, "dl_sum": dl_sum or 0}
+    store_commit.update_json(
+        path,
+        lambda m: {**m, "deletes": m.get("deletes", {}) | {delete_id: stats}},
+        None,
+    )
     return True
 
 
@@ -1424,13 +1417,14 @@ def compact_bm25_index(spark: SparkSession, index_dir: str) -> tuple[int, int]:
     """Fold all committed shards into one — the small-files answer for
     a store that ingests daily. Reads only committed postings,
     rewrites them as a single new shard, commits a meta listing just
-    it (stats summed), then removes unreferenced shard directories
+    it (stats summed) plus any shard or delete committed after the
+    snapshot, then sweeps unreferenced shard and tombstone directories
     (which also garbage-collects crashed ingest leftovers). Returns
     (shards_before, shards_after)."""
-    import shutil
     import uuid
 
-    meta = _bm25_read_meta(index_dir)
+    path = _bm25_meta_path(index_dir)
+    meta = store_commit.read_json(path)
     committed = list(meta["shards"])
     deletes = meta.get("deletes", {})
     if len(committed) < 2 and not deletes:
@@ -1457,20 +1451,28 @@ def compact_bm25_index(spark: SparkSession, index_dir: str) -> tuple[int, int]:
         "dl_sum": sum(s["dl_sum"] for s in meta["shards"].values())
         - sum(d["dl_sum"] for d in deletes.values()),
     }
-    _bm25_commit_meta(
-        index_dir,
-        {"n_buckets": meta["n_buckets"], "shards": {new_id: folded}},
+
+    def _swap(m: dict) -> dict:
+        # Shards and deletes committed AFTER our snapshot (a racing
+        # writer) were not folded, so they stay listed.
+        m["shards"] = {new_id: folded} | {
+            s: v for s, v in m["shards"].items() if s not in committed
+        }
+        m["deletes"] = {
+            d: v for d, v in m.get("deletes", {}).items() if d not in deletes
+        }
+        return m
+
+    final = store_commit.update_json(path, _swap, None)
+    store_commit.sweep(
+        os.path.join(index_dir, "postings"), "shard=",
+        {f"shard={s}" for s in final["shards"]},
     )
-    root = os.path.join(index_dir, "postings")
-    for name in os.listdir(root):
-        if name.startswith("shard=") and name != f"shard={new_id}":
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-    tomb_root = os.path.join(index_dir, "tombstones")
-    if os.path.isdir(tomb_root):
-        for name in os.listdir(tomb_root):
-            if name.removeprefix("delete=") in deletes:
-                shutil.rmtree(os.path.join(tomb_root, name), ignore_errors=True)
-    return (len(committed), 1)
+    store_commit.sweep(
+        os.path.join(index_dir, "tombstones"), "delete=",
+        {f"delete={d}" for d in final["deletes"]},
+    )
+    return (len(committed), len(final["shards"]))
 
 
 def _bm25_read_postings(
@@ -1499,7 +1501,7 @@ def bm25_topk_from_index(
     committed shards AND those buckets (both are partition columns),
     and scoring reuses the shared tail with corpus stats summed over
     the shard ledger."""
-    meta = _bm25_read_meta(index_dir)
+    meta = store_commit.read_json(_bm25_meta_path(index_dir))
     deletes = meta.get("deletes", {})
     n_docs = sum(s["n_docs"] for s in meta["shards"].values()) - sum(
         d["n_docs"] for d in deletes.values()
@@ -1718,7 +1720,7 @@ def bm25_index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     'deleted' summary row — when n_postings fragmentation grows or
     the deleted row dominates, ``compact_bm25_index`` is due. One
     shard-pruned aggregate over postings; shard-count-sized output."""
-    meta = _bm25_read_meta(index_dir)
+    meta = store_commit.read_json(_bm25_meta_path(index_dir))
     per_shard = {
         r["shard"]: r
         for r in _bm25_read_postings(spark, index_dir, meta)
@@ -1765,8 +1767,6 @@ def build_lm_store(train_docs: DataFrame, store_path: str) -> None:
     every later shard scores against the store without touching the
     training data again — the standing-model pattern the BM25 and
     ANN stores already follow, on the quality axis."""
-    import json
-
     tr = train_docs.select(tokens(F.col("text")).alias("toks")).localCheckpoint()
     big = (
         tr.select(F.explode(_bigram_array(F.col("toks"))).alias("gram"))
@@ -1784,10 +1784,9 @@ def build_lm_store(train_docs: DataFrame, store_path: str) -> None:
     vocab_size = (
         tr.select(F.explode("toks").alias("tk")).agg(F.countDistinct("tk")).first()[0]
     ) or 1
-    tmp = os.path.join(store_path, "meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump({"vocab_size": int(vocab_size)}, fh)
-    os.replace(tmp, os.path.join(store_path, "meta.json"))
+    store_commit.write_json(
+        os.path.join(store_path, "meta.json"), {"vocab_size": int(vocab_size)}
+    )
 
 
 def perplexity_score_from_store(
@@ -1796,11 +1795,10 @@ def perplexity_score_from_store(
     """Score documents against a persisted LM store — identical
     arithmetic (and output) to ``perplexity_score``, zero training
     work in the plan."""
-    import json
-
     spark = docs_score.sparkSession
-    with open(os.path.join(store_path, "meta.json")) as fh:
-        vocab_size = json.load(fh)["vocab_size"]
+    vocab_size = store_commit.read_json(os.path.join(store_path, "meta.json"))[
+        "vocab_size"
+    ]
     big = spark.read.parquet(os.path.join(store_path, "bigrams"))
     ctx = spark.read.parquet(os.path.join(store_path, "contexts"))
     sb = (
@@ -1907,7 +1905,7 @@ def phrase_search_from_index(
     read."""
     if len(phrase_terms) < 2:
         raise ValueError("phrase needs at least two terms")
-    meta = _bm25_read_meta(index_dir)
+    meta = store_commit.read_json(_bm25_meta_path(index_dir))
     bdf = (
         spark.createDataFrame([(t,) for t in set(phrase_terms)], "term string")
         .select(
@@ -3390,15 +3388,17 @@ def append_ns_vocab_shard(
     form of the word2vec table (the band-store discipline,
     operators/dedup.py): counts land under
     ``counts/ingest=<id>/`` (full overwrite, so a replayed ingest id
-    is idempotent), and the id joins ``manifest.json`` via the
-    locked atomic-rename commit, so readers never see a crashed
+    is idempotent), and the id joins ``manifest.json`` through
+    ``store_commit.update_json``, so readers never see a crashed
     partial. Token counts are ADDITIVE, which is the whole trick —
     the store never rewrites old shards and the CDF is derived at
     serve time from the committed sum."""
     import os
 
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest,
+        EMPTY_MANIFEST,
+        manifest_path,
+        with_ingest,
     )
 
     counts = (
@@ -3409,9 +3409,8 @@ def append_ns_vocab_shard(
     counts.write.mode("overwrite").parquet(
         os.path.join(store_dir, "counts", f"ingest={ingest_id}")
     )
-    _commit_manifest(
-        store_dir,
-        lambda ids: ids if ingest_id in ids else [*ids, ingest_id],
+    store_commit.update_json(
+        manifest_path(store_dir), with_ingest(ingest_id), EMPTY_MANIFEST
     )
 
 

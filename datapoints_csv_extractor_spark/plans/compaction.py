@@ -7,8 +7,8 @@ with file COUNT, not bytes. Compaction rewrites each date partition
 to ~target-sized files.
 
 Design:
-- Partition-at-a-time rewrite into a staging directory + atomic
-  directory swap. Readers keep working against the old files until
+- Partition-at-a-time rewrite into a staging directory + directory
+  swap (``store_commit.replace_dir``). Readers keep working against the old files until
   the swap; a crash mid-compact leaves the original partition intact
   (staging is simply abandoned). This is the manual analog of a table
   format's OPTIMIZE/rewrite-files transaction, which is the right
@@ -18,16 +18,20 @@ Design:
   size.
 - File sizing via ``repartition(n)`` where n = ceil(bytes /
   target_file_bytes) measured from the partition's current footprint.
+- Every commit here goes through ``sinks/store_commit.py``; the
+  manifest-backed stores commit one new ingest with ``update_json``
+  (keeping any racing ingest or delete), then ``sweep`` the rest.
 """
 
 from __future__ import annotations
 
 import math
-import shutil
 import uuid
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -45,7 +49,7 @@ def compact_datapoints(
 ) -> dict[str, tuple[int, int]]:
     """Compact oversized date partitions; returns {dt: (before, after)}.
 
-    Local-filesystem implementation (Path.rename swap). On an object
+    Local-filesystem implementation (directory swap). On an object
     store the same flow runs over the store's rename/commit primitive
     or, preferably, a transactional table format's rewrite API.
     """
@@ -66,12 +70,7 @@ def compact_datapoints(
             .write.mode("overwrite")
             .parquet(str(staging))
         )
-        # Atomic-enough swap: old dir moves aside, staging takes its
-        # place, old dir removed last (crash leaves one valid copy).
-        retired = base / f"_retired_{part_dir.name}_{uuid.uuid4().hex[:8]}"
-        part_dir.rename(retired)
-        staging.rename(part_dir)
-        shutil.rmtree(retired, ignore_errors=True)
+        store_commit.replace_dir(staging, part_dir)
         # Drop the staging _SUCCESS marker; partition dirs hold data only.
         (part_dir / "_SUCCESS").unlink(missing_ok=True)
         results[part_dir.name] = (n_files, _partition_stats(part_dir)[0])
@@ -105,11 +104,40 @@ def compact_flat_table(
         .write.mode("overwrite")
         .parquet(str(staging))
     )
-    retired = part_dir.parent / f"_retired_{part_dir.name}_{uuid.uuid4().hex[:8]}"
-    part_dir.rename(retired)
-    staging.rename(part_dir)
-    shutil.rmtree(retired, ignore_errors=True)
+    store_commit.replace_dir(staging, part_dir)
     return (n_files, _partition_stats(part_dir)[0])
+
+
+def _commit_compaction(
+    store: Path, new_id: str, ingests: list, deletes: list, tables
+) -> None:
+    """Commit ``new_id`` in place of the snapshotted ``ingests`` and
+    clear the snapshotted ``deletes`` — an ingest or delete committed
+    AFTER the snapshot (a racing writer) was not merged or folded, so
+    it stays listed — then sweep every ingest and tombstone directory
+    the committed manifest no longer lists."""
+    from datapoints_csv_extractor_spark.operators.dedup import (
+        EMPTY_MANIFEST,
+        manifest_path,
+    )
+
+    def _swap(m: dict) -> dict:
+        return {
+            **m,
+            "ingests": [new_id] + [i for i in m["ingests"] if i not in ingests],
+            "deletes": [d for d in m["deletes"] if d not in deletes],
+        }
+
+    final = store_commit.update_json(
+        manifest_path(str(store)), _swap, EMPTY_MANIFEST
+    )
+    for name in tables:
+        store_commit.sweep(
+            store / name, "ingest=", {f"ingest={i}" for i in final["ingests"]}
+        )
+    store_commit.sweep(
+        store / "tombstones", "delete=", {f"delete={d}" for d in final["deletes"]}
+    )
 
 
 def compact_band_store(
@@ -123,22 +151,20 @@ def compact_band_store(
     re-aggregated to one row per bucket), commit a manifest listing
     only it, then remove every directory the manifest no longer
     references — which also garbage-collects crash leftovers from
-    uncommitted folds. The manifest rename is the atomic cut-over, and
-    an ingest racing the compaction commits through the same catalog
-    lock, so its id is either merged or preserved — never lost.
+    uncommitted folds. The manifest commit is the atomic cut-over, and
+    an ingest racing the compaction commits through the same locked
+    update, so its id is either merged or preserved — never lost.
     Returns per-table (files_before, files_after)."""
-    import uuid
-
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest_full,
-        _read_manifest_full,
+        EMPTY_MANIFEST,
+        manifest_path,
         read_band_store,
         store_tombstones,
     )
     from pyspark.sql import functions as F
 
     store = Path(store_path)
-    manifest = _read_manifest_full(str(store))
+    manifest = store_commit.read_json(manifest_path(str(store)), EMPTY_MANIFEST)
     ingests, deletes = manifest["ingests"], manifest["deletes"]
     # A committed delete makes even a single-ingest store worth
     # compacting (the fold is what physically drops the rows); with
@@ -183,24 +209,7 @@ def compact_band_store(
         )
         results[name] = (before, len(list((table_dir / f"ingest={new_id}").glob("*.parquet"))))
 
-    def _swap(m: dict) -> dict:
-        # Preserve any ingest/delete committed AFTER our snapshot
-        # (racing writer): it was not merged/folded, so it must stay
-        # listed.
-        m["ingests"] = [new_id] + [i for i in m["ingests"] if i not in ingests]
-        m["deletes"] = [d for d in m["deletes"] if d not in deletes]
-        return m
-
-    final = _commit_manifest_full(str(store), _swap)
-    kept = set(final["ingests"])
-    kept_deletes = set(final["deletes"])
-    for name in tables:
-        for d in (store / name).glob("ingest=*"):
-            if d.name.removeprefix("ingest=") not in kept:
-                shutil.rmtree(d, ignore_errors=True)
-    for d in (store / "tombstones").glob("delete=*"):
-        if d.name.removeprefix("delete=") not in kept_deletes:
-            shutil.rmtree(d, ignore_errors=True)
+    _commit_compaction(store, new_id, ingests, deletes, tables)
     return results
 
 
@@ -220,10 +229,10 @@ def compact_ivf_store(
     The embedding-side mirror of ``compact_band_store`` — daily
     ``semantic_dedup_incremental`` / ``assign_to_ivf_index`` folds
     append one small file per (shard x cell) forever, and file COUNT
-    is what scan planning pays for at 100 TB. The manifest rename is
+    is what scan planning pays for at 100 TB. The manifest commit is
     the atomic cut-over; an ingest racing the compaction commits
-    through the same catalog lock, so its id is either in our snapshot
-    (merged) or preserved by the swap — never lost. Readers keep the
+    through the same locked update, so its id is either in our
+    snapshot (merged) or preserved by the swap — never lost. Readers keep the
     ``cell`` partition column, so n_probe pruning is unchanged.
     Centroids are untouched (compaction re-files rows; it never moves
     them between cells — that is ``refresh_ivf_index``'s job).
@@ -231,18 +240,15 @@ def compact_ivf_store(
     Returns (files_before, files_after), or None when fewer than
     ``min_ingests`` ingests are committed.
     """
-    import os
-    import uuid
-
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest_full,
-        _read_manifest_full,
+        EMPTY_MANIFEST,
+        manifest_path,
         store_tombstones,
     )
     from pyspark.sql import functions as F
 
     store = Path(index_dir)
-    manifest = _read_manifest_full(str(store))
+    manifest = store_commit.read_json(manifest_path(str(store)), EMPTY_MANIFEST)
     ingests, deletes = manifest["ingests"], manifest["deletes"]
     if not ingests or (len(ingests) < min_ingests and not deletes):
         return None
@@ -265,20 +271,7 @@ def compact_ivf_store(
         "cell"
     ).parquet(str(base / f"ingest={new_id}"))
 
-    def _swap(m: dict) -> dict:
-        m["ingests"] = [new_id] + [i for i in m["ingests"] if i not in ingests]
-        m["deletes"] = [d for d in m["deletes"] if d not in deletes]
-        return m
-
-    final = _commit_manifest_full(str(store), _swap)
-    kept = set(final["ingests"])
-    kept_deletes = set(final["deletes"])
-    for d in base.glob("ingest=*"):
-        if d.name.removeprefix("ingest=") not in kept:
-            shutil.rmtree(d, ignore_errors=True)
-    for d in (store / "tombstones").glob("delete=*"):
-        if d.name.removeprefix("delete=") not in kept_deletes:
-            shutil.rmtree(d, ignore_errors=True)
+    _commit_compaction(store, new_id, ingests, deletes, [table])
     after = len(list((base / f"ingest={new_id}").glob("cell=*/*.parquet")))
     return (before, after)
 

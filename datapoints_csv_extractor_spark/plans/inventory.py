@@ -18,10 +18,11 @@ store-count-sized.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 _COLUMNS = (
     "store_type string, path string, ok boolean, n_commits long, "
@@ -35,15 +36,14 @@ def _count(spark: SparkSession, path: str) -> int:
 
 def _band(spark: SparkSession, path: str) -> tuple:
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
+        manifest_path,
         store_tombstones,
     )
 
     # A fresh/absent directory is a valid EMPTY store to the readers
-    # (their crash-safety posture) but "not a store" to an inventory.
-    if not os.path.exists(os.path.join(path, "manifest.json")):
-        raise FileNotFoundError(path)
-    m = _read_manifest_full(path)
+    # (their crash-safety posture) but "not a store" to an inventory:
+    # read without a default, so a missing manifest raises.
+    m = store_commit.read_json(manifest_path(path))
     n_rows = sum(
         _count(spark, os.path.join(path, "signatures", f"ingest={i}"))
         for i in m["ingests"]
@@ -59,12 +59,12 @@ def _band(spark: SparkSession, path: str) -> tuple:
 
 def _bm25(spark: SparkSession, path: str) -> tuple:
     from datapoints_csv_extractor_spark.operators.textops import (
-        _bm25_read_meta,
+        _bm25_meta_path,
         _bm25_read_postings,
         _bm25_tombstones,
     )
 
-    meta = _bm25_read_meta(path)
+    meta = store_commit.read_json(_bm25_meta_path(path))
     n_rows = _bm25_read_postings(spark, path, meta).count()
     dead = _bm25_tombstones(spark, path, meta)
     return (
@@ -77,13 +77,11 @@ def _bm25(spark: SparkSession, path: str) -> tuple:
 
 def _ivf(spark: SparkSession, path: str) -> tuple:
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
+        manifest_path,
         store_tombstones,
     )
 
-    if not os.path.exists(os.path.join(path, "manifest.json")):
-        raise FileNotFoundError(path)
-    m = _read_manifest_full(path)
+    m = store_commit.read_json(manifest_path(path))
     n_rows = sum(
         _count(spark, os.path.join(path, "assignments", f"ingest={i}"))
         for i in m["ingests"]
@@ -100,15 +98,15 @@ def _ivf(spark: SparkSession, path: str) -> tuple:
 
 def _sq(spark: SparkSession, path: str) -> tuple:
     from datapoints_csv_extractor_spark.operators.similarity import (
+        _sq_codes,
         _sq_tombstones,
     )
 
-    with open(os.path.join(path, "params.json")) as fh:
-        params = json.load(fh)
+    params = store_commit.read_json(os.path.join(path, "params.json"))
     dead = _sq_tombstones(spark, path)
     return (
         1,
-        _count(spark, os.path.join(path, "codes")),
+        _count(spark, _sq_codes(path, params)),
         dead.count() if dead is not None else 0,
         f"dim={len(params['mins'])}",
     )
@@ -126,16 +124,14 @@ def _merge(spark: SparkSession, path: str) -> tuple:
 
 
 def _lm(spark: SparkSession, path: str) -> tuple:
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = store_commit.read_json(os.path.join(path, "meta.json"))
     return 1, _count(spark, os.path.join(path, "bigrams")), 0, (
         f"vocab={meta['vocab_size']}"
     )
 
 
 def _dsir(spark: SparkSession, path: str) -> tuple:
-    with open(os.path.join(path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = store_commit.read_json(os.path.join(path, "meta.json"))
     return 1, _count(spark, os.path.join(path, "ratios")), 0, (
         f"buckets={meta['n_buckets']}"
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datapoints_csv_extractor_spark.sinks import store_commit
+
 ZORDER_BITS = 16
 
 
@@ -286,7 +288,9 @@ def q_zorder_pruning_report(spark, sf_dir: str) -> DataFrame:
 # see everything, pruning works per-run, and OPTIMIZE re-clusters the
 # raw tail WITHOUT rewriting the base — the Delta/Iceberg OPTIMIZE
 # ZORDER cadence (amortized maintenance, never O(table) per append).
-# Commits are atomic manifest renames (the merge-store idiom).
+# The manifest is read and committed through sinks/store_commit.py:
+# appends and OPTIMIZE are locked read-modify-writes, so a racing
+# append is never dropped from the manifest.
 # ---------------------------------------------------------------------------
 
 
@@ -294,23 +298,6 @@ def _zt_manifest_path(path: str) -> str:
     import os
 
     return os.path.join(path, "_zorder_manifest.json")
-
-
-def _zt_read_manifest(path: str) -> dict:
-    import json
-
-    with open(_zt_manifest_path(path)) as fh:
-        return json.load(fh)
-
-
-def _zt_commit(path: str, manifest: dict) -> None:
-    import json
-    import os
-
-    tmp = _zt_manifest_path(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, _zt_manifest_path(path))
 
 
 def zorder_table_write(
@@ -323,8 +310,11 @@ def zorder_table_write(
 
     run = f"run_{uuid.uuid4().hex[:8]}"
     write_zordered(df, os.path.join(path, run), cols, bits, n_files)
-    _zt_commit(path, {"cols": cols, "bits": bits, "n_files": n_files,
-                      "runs": [run], "raw": []})
+    store_commit.write_json(
+        _zt_manifest_path(path),
+        {"cols": cols, "bits": bits, "n_files": n_files, "runs": [run],
+         "raw": []},
+    )
 
 
 def zorder_table_append(df: DataFrame, path: str) -> None:
@@ -333,11 +323,11 @@ def zorder_table_append(df: DataFrame, path: str) -> None:
     import os
     import uuid
 
-    m = _zt_read_manifest(path)
     raw = f"raw_{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(os.path.join(path, raw))
-    m["raw"].append(raw)
-    _zt_commit(path, m)
+    store_commit.update_json(
+        _zt_manifest_path(path), lambda m: {**m, "raw": m["raw"] + [raw]}, None
+    )
 
 
 def read_zorder_table(spark, path: str) -> DataFrame:
@@ -345,7 +335,7 @@ def read_zorder_table(spark, path: str) -> DataFrame:
     appends (a reader never waits for maintenance)."""
     import os
 
-    m = _zt_read_manifest(path)
+    m = store_commit.read_json(_zt_manifest_path(path))
     dirs = [os.path.join(path, d) for d in m["runs"] + m["raw"]]
     return spark.read.parquet(*dirs)
 
@@ -356,13 +346,13 @@ def optimize_zorder_table(
     """OPTIMIZE: re-cluster the RAW tail into one new z-ordered run
     (base runs untouched — O(tail), the amortized steady state), or
     ``full=True`` to rewrite everything into a single run (when run
-    count itself hurts). Old directories are removed AFTER the commit
-    points away from them. Returns {'compacted_rows', 'runs', 'raw'}."""
+    count itself hurts). Old directories are swept AFTER the commit
+    points away from them; a raw append committed meanwhile stays
+    listed. Returns {'compacted_rows', 'runs', 'raw'}."""
     import os
-    import shutil
     import uuid
 
-    m = _zt_read_manifest(path)
+    m = store_commit.read_json(_zt_manifest_path(path))
     victims = list(m["raw"]) if not full else list(m["raw"]) + list(m["runs"])
     if not full and len(victims) < min_raw:
         return {"compacted_rows": 0, "runs": len(m["runs"]),
@@ -373,9 +363,15 @@ def optimize_zorder_table(
     run = f"run_{uuid.uuid4().hex[:8]}"
     write_zordered(df, os.path.join(path, run), m["cols"], m["bits"],
                    m["n_files"])
-    m["runs"] = ([run] if full else m["runs"] + [run])
-    m["raw"] = []
-    _zt_commit(path, m)
-    for d in src:
-        shutil.rmtree(d, ignore_errors=True)
+    m = store_commit.update_json(
+        _zt_manifest_path(path),
+        lambda cur: {
+            **cur,
+            "runs": [r for r in cur["runs"] if r not in victims] + [run],
+            "raw": [r for r in cur["raw"] if r not in victims],
+        },
+        None,
+    )
+    for prefix in ("run_", "raw_"):
+        store_commit.sweep(path, prefix, set(m["runs"] + m["raw"]))
     return {"compacted_rows": n, "runs": len(m["runs"]), "raw": len(m["raw"])}

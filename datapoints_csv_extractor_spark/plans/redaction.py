@@ -31,12 +31,13 @@ surface a data PLATFORM needs layered over the engine.
 
 from __future__ import annotations
 
-import shutil
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 
 def forget_documents(
@@ -174,7 +175,8 @@ def _rewrite_corpus_partitions(
 ) -> int:
     """Rewrite ONLY the split partitions that contain a doc to
     forget: per-partition membership probe (one pruned scan), then a
-    staging write + atomic directory swap for each affected split —
+    staging write + directory swap (``store_commit.replace_dir``) for
+    each affected split —
     untouched splits keep their bytes (and mtimes). Returns rows
     removed."""
     root = Path(corpus_path)
@@ -194,9 +196,6 @@ def _rewrite_corpus_partitions(
         base = part_dir.parent
         staging = base / f"_redact_{part_dir.name}_{uuid.uuid4().hex[:8]}"
         survivors.write.mode("overwrite").parquet(str(staging))
-        retired = base / f"_retired_{part_dir.name}_{uuid.uuid4().hex[:8]}"
-        part_dir.rename(retired)
-        staging.rename(part_dir)
-        shutil.rmtree(retired, ignore_errors=True)
+        store_commit.replace_dir(staging, part_dir)
         removed += hit
     return removed

@@ -56,14 +56,15 @@ log, ever.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datapoints_csv_extractor_spark.sinks import store_commit
 from datapoints_csv_extractor_spark.sinks.merge_store import (
     _read_manifest,
+    bucket_expr,
     latest_version,
     read_store,
     upsert_into_store,
@@ -88,11 +89,9 @@ def _watermark_path(store_path: str) -> str:
 def store_watermark(store_path: str):
     """The persisted compaction watermark (ISO string) or None if the
     store has never been compacted (every arrival order is exact)."""
-    p = _watermark_path(store_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)["watermark"]
+    return store_commit.read_json(
+        _watermark_path(store_path), {"watermark": None}
+    )["watermark"]
 
 
 def scd2_fold(
@@ -204,14 +203,11 @@ def compact_scd2_store(
     # checkpoint's own job as observed metrics — one action where
     # there were three (count + checkpoint + the upsert's census;
     # guide §5, the lifecycle's wall is job-count-bound at demo
-    # scale). The bucket expression mirrors the store's _with_bucket
-    # exactly (same keys, the MANIFEST's n_buckets), which is the
-    # affected_hint contract.
+    # scale). The bucket expression is the store's own (same keys,
+    # the MANIFEST's n_buckets), which is the affected_hint contract.
+    keys = ["user_id", "ts", "event_id"]
     eff_buckets = _read_manifest(store_path)["n_buckets"] or n_buckets
-    bucket = F.pmod(
-        F.xxhash64(F.col("user_id"), F.col("ts"), F.col("event_id")),
-        F.lit(eff_buckets),
-    ).cast("int")
+    bucket = bucket_expr(keys, eff_buckets)
     obs = Observation()
     dead = (
         ev.where(F.col("ts") < wm_lit)
@@ -232,16 +228,15 @@ def compact_scd2_store(
             spark,
             dead,
             store_path,
-            keys=["user_id", "ts", "event_id"],
+            keys=keys,
             version_cols=["fold_seq"],
             n_buckets=n_buckets,
             affected_hint=[int(b) for b in got["affected"]],
         )
-    wm_str = str(watermark)
-    tmp = _watermark_path(store_path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"watermark": wm_str, "fold_seq": fold_seq}, fh)
-    os.replace(tmp, _watermark_path(store_path))
+    store_commit.write_json(
+        _watermark_path(store_path),
+        {"watermark": str(watermark), "fold_seq": fold_seq},
+    )
     return n_dead
 
 

@@ -8,26 +8,23 @@ Here the catalog is a small parquet dimension table:
   the store doesn't exist yet), always broadcastable downstream.
 - ``append_missing`` -> the per-batch upsert: distinct observed ids,
   broadcast LEFT ANTI vs the store, append only the new rows. The
-  check-then-append critical section is serialized by an exclusive
-  lock file (O_CREAT|O_EXCL — atomic on POSIX and the create-if-absent
-  primitive object stores emulate), so concurrent writers converge to
-  the union instead of double-creating series that race the membership
-  probe. Locks abandoned by a crashed writer are taken over after
-  ``stale_after``. A transactional table format's MERGE (Delta/
+  check-then-append critical section is serialized by
+  ``store_commit.lock`` (an exclusive lock file), so concurrent writers
+  converge to the union instead of double-creating series that race
+  the membership probe. A transactional table format's MERGE (Delta/
   Iceberg) is the production-grade replacement at fleet scale; the
   lock file keeps plain parquet correct for a handful of writers.
 """
 
 from __future__ import annotations
 
-import contextlib
-import os
 import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from datapoints_csv_extractor_spark.sinks import store_commit
 from datapoints_csv_extractor_spark.sources.catalog import (
     CATALOG_COLUMNS,
     missing_series,
@@ -73,59 +70,6 @@ def load_catalog_with_retry(
     raise SystemExit(1) from last_error
 
 
-@contextlib.contextmanager
-def catalog_lock(
-    path: str | Path,
-    timeout: float = 30.0,
-    stale_after: float = 120.0,
-    sleep=time.sleep,
-):
-    """Exclusive advisory lock for the catalog's check-then-append
-    critical section. ``<path>.lock`` is created with O_CREAT|O_EXCL
-    (atomic create-if-absent); contenders spin with a short sleep until
-    ``timeout``. A lock older than ``stale_after`` is presumed
-    abandoned by a crashed writer and broken — the unlink+retry race
-    is itself safe because creation stays atomic."""
-    import uuid
-
-    lock = f"{path}.lock"
-    deadline = time.monotonic() + timeout
-    while True:
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            break
-        except FileExistsError:
-            with contextlib.suppress(FileNotFoundError):
-                if time.time() - os.path.getmtime(lock) > stale_after:
-                    # Break the stale lock via ATOMIC rename, then
-                    # re-verify staleness on the renamed file: a plain
-                    # check-then-unlink could delete a FRESH lock some
-                    # other breaker just created (TOCTOU). rename
-                    # succeeds for exactly one contender; a breaker
-                    # that renamed a lock which turned out fresh puts
-                    # it back.
-                    grave = f"{lock}.breaking.{uuid.uuid4().hex[:8]}"
-                    with contextlib.suppress(FileNotFoundError, OSError):
-                        os.rename(lock, grave)
-                        if time.time() - os.path.getmtime(grave) > stale_after:
-                            os.unlink(grave)
-                        else:
-                            os.rename(grave, lock)
-                    continue
-            if time.monotonic() >= deadline:
-                raise TimeoutError(
-                    f"catalog lock {lock} still held after {timeout}s"
-                )
-            sleep(0.05)
-    try:
-        yield
-    finally:
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(lock)
-
-
 def append_missing(
     spark: SparkSession, datapoints: DataFrame, path: str | Path
 ) -> int:
@@ -137,11 +81,11 @@ def append_missing(
     one per series of the batch) are collected once: their count is
     the return value and the append writes them as one file.
 
-    The load-probe-append sequence holds ``catalog_lock`` so two
+    The load-probe-append sequence holds ``store_commit.lock`` so two
     writers can't both miss the same series and append it twice —
     interleaved appends converge to the union of their series.
     """
-    with catalog_lock(path):
+    with store_commit.lock(path):
         catalog = load_catalog(spark, path)
         new_rows = missing_series(datapoints, catalog).collect()
         if new_rows:

@@ -10,15 +10,16 @@ O(|delta| + |affected buckets|).
 
 Commits are MANIFESTS, not directory mutations (the Iceberg/Delta
 idea reduced to its essentials): every bucket generation is an
-immutable parquet directory under ``buckets/``; a manifest maps
-bucket id -> generation directory; ``_latest`` is an atomically
-renamed pointer. An upsert writes ONLY the affected buckets' new
-generations and commits a manifest that references new generations
-for those buckets and the PRIOR generations for everything else — no
-copying, no in-place overwrite. That buys:
+immutable parquet directory under ``buckets/``; manifest
+``manifests/v<k>.json`` maps bucket id -> generation directory, and
+the latest version is the highest committed one. An upsert writes
+ONLY the affected buckets' new generations and commits a manifest
+that references new generations for those buckets and the PRIOR
+generations for everything else — no copying, no in-place
+overwrite. That buys:
 
 - **snapshot isolation**: a reader pinned to a manifest never sees a
-  half-applied batch (the commit is one pointer rename);
+  half-applied batch (the commit is one exclusive file create);
 - **time travel**: ``read_store(version=k)`` reads any retained
   snapshot;
 - **cheap rollback/audit**: old manifests are a few bytes;
@@ -27,8 +28,11 @@ copying, no in-place overwrite. That buys:
 
 Replaying a batch is harmless: latest-wins merge is idempotent (max
 of a max) — the replay commits a new version with identical content.
-Single-writer assumed (the ingest pipeline owns the store; concurrent
-writers would need the catalog-store lock, sinks/catalog_store.py).
+
+Conflict rule (sinks/store_commit.py): an upsert commits ``v<k+1>``
+for the version ``k`` it read by exclusive create, so of two writers
+on one base the second raises ``CommitConflict``, its generations are
+swept, and the store keeps the winner's rows.
 
 Tombstones are applied and DROPPED at merge time (the store holds
 only live rows). Correct under the streaming contract — batches
@@ -44,35 +48,52 @@ posture.
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.operators.relational import merge_upsert
+from datapoints_csv_extractor_spark.sinks import store_commit
 
 _BUCKET = "__bucket"
-_LATEST = "_latest"
+_MANIFEST_NAME = re.compile(r"v(\d+)\.json")
+
+
+def bucket_expr(keys: list[str], n_buckets: int) -> Column:
+    """The store's bucket of a row: ``pmod(xxhash64(*keys), n_buckets)``.
+    Every writer, reader and ``affected_hint`` producer uses this one
+    expression, so they cannot drift apart."""
+    return F.pmod(
+        F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)
+    ).cast("int")
 
 
 def _with_bucket(df: DataFrame, keys: list[str], n_buckets: int) -> DataFrame:
-    b = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets))
-    return df.withColumn(_BUCKET, b.cast("int"))
+    return df.withColumn(_BUCKET, bucket_expr(keys, n_buckets))
 
 
 def _manifest_dir(store_path: str) -> str:
     return os.path.join(store_path, "manifests")
 
 
+def _manifest_file(store_path: str, version: int) -> str:
+    return os.path.join(_manifest_dir(store_path), f"v{version}.json")
+
+
 def latest_version(store_path: str) -> int | None:
-    p = os.path.join(store_path, _LATEST)
-    if not os.path.exists(p):
+    """The highest committed manifest version, or None for no store."""
+    try:
+        names = os.listdir(_manifest_dir(store_path))
+    except FileNotFoundError:
         return None
-    with open(p) as fh:
-        return int(fh.read().strip())
+    versions = [
+        int(m.group(1)) for m in map(_MANIFEST_NAME.fullmatch, names) if m
+    ]
+    return max(versions, default=None)
 
 
 def _read_manifest(store_path: str, version: int | None = None) -> dict:
@@ -83,22 +104,7 @@ def _read_manifest(store_path: str, version: int | None = None) -> dict:
     # of a FileNotFoundError on manifests/v0.json.
     if v is None or v == 0:
         return {"version": 0, "n_buckets": None, "schema": None, "buckets": {}}
-    with open(os.path.join(_manifest_dir(store_path), f"v{v}.json")) as fh:
-        return json.load(fh)
-
-
-def _commit_manifest(store_path: str, manifest: dict) -> None:
-    """Write manifest v<k>, then atomically swing the pointer."""
-    os.makedirs(_manifest_dir(store_path), exist_ok=True)
-    mpath = os.path.join(_manifest_dir(store_path), f"v{manifest['version']}.json")
-    tmp = mpath + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, mpath)
-    ptmp = os.path.join(store_path, _LATEST + ".tmp")
-    with open(ptmp, "w") as fh:
-        fh.write(str(manifest["version"]))
-    os.replace(ptmp, os.path.join(store_path, _LATEST))
+    return store_commit.read_json(_manifest_file(store_path, v))
 
 
 def _align_to_schema(df: DataFrame, schema) -> DataFrame:
@@ -169,9 +175,13 @@ def upsert_into_store(
     ``affected_hint``: the delta's exact distinct bucket-id set when
     the caller already has it in hand (e.g. observed as a metric of
     the job that materialized the delta) — skips the census action.
-    The hint must equal ``pmod(xxhash64(*keys), n_buckets)`` over the
-    delta's rows; a wrong hint reads/rewrites the wrong buckets, so
-    only pass values derived from the same rows and key columns."""
+    The hint must cover ``bucket_expr(keys, n_buckets)`` over the
+    delta's rows: a staged bucket the hint does not list raises
+    ``ValueError`` before the commit, and the store stays at its prior
+    version.
+
+    A concurrent upsert that commits first makes this one raise
+    ``store_commit.CommitConflict`` (see the module docstring)."""
     from pyspark.sql import types as T
 
     m = _read_manifest(store_path)
@@ -240,19 +250,27 @@ def upsert_into_store(
     out = _with_bucket(merged.drop(deleted_col), keys, n_buckets)
 
     gen = uuid.uuid4().hex[:8]
-    staging = os.path.join(store_path, "buckets", f"_stage_{gen}")
+    broot = os.path.join(store_path, "buckets")
+    staging = os.path.join(broot, f"_stage_{gen}")
     out.write.mode("overwrite").partitionBy(_BUCKET).parquet(staging)
-    new_dirs: dict[str, str] = {}
-    for name in os.listdir(staging):
-        if not name.startswith(f"{_BUCKET}="):
-            continue
-        b = name.split("=", 1)[1]
-        dest = f"g{gen}_b{b}"
-        os.replace(
-            os.path.join(staging, name),
-            os.path.join(store_path, "buckets", dest),
+    staged = {
+        name.split("=", 1)[1]: name
+        for name in os.listdir(staging)
+        if name.startswith(f"{_BUCKET}=")
+    }
+    stray = sorted(set(staged) - {str(b) for b in affected}, key=int)
+    if stray:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise ValueError(
+            f"affected_hint misses bucket(s) {stray} of the delta; "
+            f"store {store_path!r} left at version {m['version']}"
         )
-        new_dirs[b] = dest
+    new_dirs: dict[str, str] = {}
+    for b, name in staged.items():
+        new_dirs[b] = f"g{gen}_b{b}"
+        store_commit.publish_dir(
+            os.path.join(staging, name), os.path.join(broot, new_dirs[b])
+        )
     shutil.rmtree(staging, ignore_errors=True)
 
     buckets = dict(m["buckets"])
@@ -260,18 +278,22 @@ def upsert_into_store(
         buckets.pop(str(b), None)  # tombstoned-empty buckets drop out
         if str(b) in new_dirs:
             buckets[str(b)] = new_dirs[str(b)]
-    _commit_manifest(
-        store_path,
-        {
-            "version": m["version"] + 1,
-            "n_buckets": n_buckets,
-            # The committed schema is the WIDENED one: evolution is
-            # monotone per commit, and every snapshot knows exactly
-            # the columns it serves.
-            "schema": widened.jsonValue(),
-            "buckets": buckets,
-        },
-    )
+    manifest = {
+        "version": m["version"] + 1,
+        "n_buckets": n_buckets,
+        # The committed schema is the WIDENED one: evolution is
+        # monotone per commit, and every snapshot knows exactly the
+        # columns it serves.
+        "schema": widened.jsonValue(),
+        "buckets": buckets,
+    }
+    try:
+        store_commit.create_json(
+            _manifest_file(store_path, manifest["version"]), manifest
+        )
+    except store_commit.CommitConflict:
+        store_commit.sweep(broot, f"g{gen}_", ())
+        raise
     return affected
 
 
@@ -289,50 +311,9 @@ def vacuum_store(store_path: str, keep_last: int = 1) -> int:
     referenced: set[str] = set()
     for v in keep:
         referenced.update(_read_manifest(store_path, v)["buckets"].values())
-    removed = 0
-    broot = os.path.join(store_path, "buckets")
-    for name in os.listdir(broot):
-        if name not in referenced:
-            shutil.rmtree(os.path.join(broot, name), ignore_errors=True)
-            removed += 1
-    for fname in os.listdir(_manifest_dir(store_path)):
-        v = int(fname.removeprefix("v").removesuffix(".json"))
-        if v not in keep:
-            os.remove(os.path.join(_manifest_dir(store_path), fname))
+    removed = store_commit.sweep(os.path.join(store_path, "buckets"), "", referenced)
+    store_commit.sweep(_manifest_dir(store_path), "", {f"v{v}.json" for v in keep})
     return removed
-
-
-def stream_upsert_into_store(
-    spark: SparkSession,
-    delta_stream: DataFrame,
-    store_path: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    version_cols: list[str],
-    deleted_col: str = "deleted",
-    n_buckets: int = 64,
-    available_now: bool = True,
-):
-    """Continuous MERGE INTO: every micro-batch commits one snapshot
-    through ``upsert_into_store``. foreachBatch is at-least-once;
-    idempotent latest-wins makes the replay safe (it commits an
-    identical-content version), and the checkpoint carries the source
-    offsets."""
-
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        upsert_into_store(
-            spark, batch_df, store_path, keys, version_cols,
-            deleted_col=deleted_col, n_buckets=n_buckets,
-        )
-
-    writer = delta_stream.writeStream.foreachBatch(_handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def store_changes(
@@ -464,8 +445,9 @@ def read_store_for_keys(
     if schema is None:
         raise ValueError(f"store {store_path!r} has no committed schema")
     wanted_rows = (
-        _with_bucket(key_values.select(*keys).distinct(), keys, m["n_buckets"])
-        .select(_BUCKET)
+        key_values.select(*keys)
+        .distinct()
+        .select(bucket_expr(keys, m["n_buckets"]).alias(_BUCKET))
         .distinct()
         .collect()
     )

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from datapoints_csv_extractor_spark.sinks import store_commit
 from datapoints_csv_extractor_spark.sinks.catalog_store import append_missing
 from datapoints_csv_extractor_spark.sinks.datapoints import write_datapoints
 from datapoints_csv_extractor_spark.sinks.lifecycle import (
@@ -75,14 +76,6 @@ def _load_pending(checkpoint_dir: str | Path) -> set[str]:
         return set(json.loads(_pending_file(checkpoint_dir).read_text()))
     except (OSError, ValueError):
         return set()
-
-
-def _save_pending(checkpoint_dir: str | Path, pending: set[str]) -> None:
-    f = _pending_file(checkpoint_dir)
-    f.parent.mkdir(parents=True, exist_ok=True)
-    tmp = f.with_suffix(".json.tmp")
-    tmp.write_text(json.dumps(sorted(pending)))
-    tmp.replace(f)  # write-then-rename: the same atomic-publish idiom
 
 
 def split_settled(
@@ -255,7 +248,7 @@ def start_live_ingest(
             settled += more
         pending.clear()
         pending.update(str(p) for p in unsettled)
-        _save_pending(checkpoint_dir, pending)
+        store_commit.write_json(_pending_file(checkpoint_dir), sorted(pending))
         stats = process_batch(
             spark,
             settled,
@@ -324,7 +317,9 @@ def flush_pending(
             )
             for key in stats:
                 stats[key] += batch[key]
-        _save_pending(checkpoint_dir, {str(p) for p in unsettled})
+        store_commit.write_json(
+            _pending_file(checkpoint_dir), sorted({str(p) for p in unsettled})
+        )
         if not unsettled or time.time() >= deadline:
             return stats
         time.sleep(min(settle_seconds, max(0.0, deadline - time.time())))

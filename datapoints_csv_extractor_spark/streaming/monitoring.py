@@ -174,11 +174,9 @@ class PrometheusExporter:
                 )
                 urllib.request.urlopen(req, timeout=5).close()
             if self.textfile:
-                import pathlib
+                from datapoints_csv_extractor_spark.sinks import store_commit
 
-                tmp = pathlib.Path(self.textfile + ".tmp")
-                tmp.write_text(body)
-                tmp.replace(self.textfile)
+                store_commit.write_text(self.textfile, body)
         except Exception as exc:  # noqa: BLE001 - metrics are best-effort
             import logging
 

@@ -163,12 +163,13 @@ def test_zorder_table_lifecycle_append_optimize(spark, tmp_path):
     import glob as g
 
     from datapoints_csv_extractor_spark.plans.layout import (
-        _zt_read_manifest,
+        _zt_manifest_path,
         optimize_zorder_table,
         read_zorder_table,
         zorder_table_append,
         zorder_table_write,
     )
+    from datapoints_csv_extractor_spark.sinks.store_commit import read_json
 
     path = str(tmp_path / "zt")
     ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
@@ -182,7 +183,7 @@ def test_zorder_table_lifecycle_append_optimize(spark, tmp_path):
     zorder_table_append(tail.where(F.col("event_id") % 2 == 0), path)
     zorder_table_append(tail.where(F.col("event_id") % 2 == 1), path)
     assert read_zorder_table(spark, path).count() == ev.count()
-    m0 = _zt_read_manifest(path)
+    m0 = read_json(_zt_manifest_path(path))
     assert len(m0["runs"]) == 1 and len(m0["raw"]) == 2
 
     mid_user = ev.agg(F.expr("percentile_approx(user_id, 0.5)")).first()[0]
@@ -204,7 +205,7 @@ def test_zorder_table_lifecycle_append_optimize(spark, tmp_path):
     base_runs = set(m0["runs"])
     r = optimize_zorder_table(spark, path)
     assert r["raw"] == 0 and r["runs"] == 2 and r["compacted_rows"] > 0
-    m1 = _zt_read_manifest(path)
+    m1 = read_json(_zt_manifest_path(path))
     assert base_runs < set(m1["runs"])  # base run untouched
     assert read_zorder_table(spark, path).count() == ev.count()
     # Raw appends are always hit (no clustering); the re-clustered
@@ -215,7 +216,7 @@ def test_zorder_table_lifecycle_append_optimize(spark, tmp_path):
     # full=True trades file count for run count: absolute files hit
     # must not grow even though the table collapses to one run.
     r2 = optimize_zorder_table(spark, path, full=True)
-    m2 = _zt_read_manifest(path)
+    m2 = read_json(_zt_manifest_path(path))
     assert len(m2["runs"]) == 1 and r2["compacted_rows"] == ev.count()
     assert read_zorder_table(spark, path).count() == ev.count()
     assert hits()[0] <= after_n

@@ -1,5 +1,6 @@
 """Hash-bucket-partitioned upsert store: MERGE INTO semantics, bucket
-locality, delete cleanup, replay idempotence, and the streaming drive."""
+locality, delete cleanup, replay idempotence, and the live pipeline's
+latest-value store."""
 from __future__ import annotations
 
 import datetime as dt
@@ -10,7 +11,6 @@ from pyspark.sql import functions as F
 
 from datapoints_csv_extractor_spark.sinks.merge_store import (
     read_store,
-    stream_upsert_into_store,
     upsert_into_store,
 )
 
@@ -160,30 +160,35 @@ def test_merge_store_time_travel_and_vacuum(spark, tmp_path):
         read_store(spark, store, version=1)
 
 
-def test_stream_upsert_into_store(spark, tmp_path):
-    """The streaming drive applies every micro-batch's changes through
-    the same merge; final store equals the batch result."""
-    src = tmp_path / "deltas"
-    ckpt = tmp_path / "ckpt"
+def test_merge_store_rejects_an_affected_hint_missing_a_bucket(spark, tmp_path):
+    """A hint that misses a bucket the delta stages raises before the
+    commit; the store stays at its prior version and rows."""
+    import pytest
+
+    from datapoints_csv_extractor_spark.sinks.merge_store import (
+        latest_version,
+    )
+
     store = str(tmp_path / "store")
-
-    def push(rows):
-        _delta(spark, rows).coalesce(1).write.mode("append").parquet(str(src))
-
-    def drain():
-        stream = spark.readStream.schema(SCHEMA).parquet(str(src))
-        q = stream_upsert_into_store(
-            spark, stream, store, str(ckpt),
-            keys=["k"], version_cols=["ts", "seq"],
+    upsert_into_store(
+        spark, _delta(spark, [("seed", 0, 0, 1.0, False)]),
+        store, keys=["k"], version_cols=["ts", "seq"], n_buckets=4,
+    )
+    delta = _delta(
+        spark, [(f"k{i}", 1, i + 1, float(i), False) for i in range(8)]
+    )
+    buckets = upsert_into_store(
+        spark, delta, str(tmp_path / "probe"), keys=["k"],
+        version_cols=["ts", "seq"], n_buckets=4,
+    )
+    assert len(buckets) > 1
+    with pytest.raises(ValueError, match="affected_hint"):
+        upsert_into_store(
+            spark, delta, store, keys=["k"], version_cols=["ts", "seq"],
+            n_buckets=4, affected_hint=buckets[:1],
         )
-        q.awaitTermination(120)
-
-    push([("a", 0, 0, 1.0, False), ("b", 0, 1, 2.0, False)])
-    drain()
-    push([("a", 5, 2, 11.0, False), ("b", 5, 3, 0.0, True),
-          ("c", 5, 4, 30.0, False)])
-    drain()
-    assert _state(spark, store) == {"a": (11.0, 2), "c": (30.0, 4)}
+    assert latest_version(store) == 1
+    assert _state(spark, store) == {"seed": (1.0, 0)}
 
 
 def test_live_pipeline_maintains_latest_store(spark, tmp_path):

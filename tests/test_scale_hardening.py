@@ -255,15 +255,15 @@ def test_compact_ivf_store_preserves_racing_ingest(spark, tmp_path):
     )
 
     # Simulate the race: between compaction's snapshot and its commit,
-    # another shard lands. Monkeypatch the full-manifest commit (the
+    # another shard lands. Monkeypatch the locked manifest update (the
     # primitive every committer funnels through) to inject the racing
     # ingest first, exactly as a concurrent writer would.
-    import datapoints_csv_extractor_spark.operators.dedup as D
+    import datapoints_csv_extractor_spark.sinks.store_commit as SC
 
-    real_commit = D._commit_manifest_full
+    real_commit = SC.update_json
     racing = {"done": False}
 
-    def racy_commit(store_path, mutate):
+    def racy_commit(path, mutate, default):
         if not racing["done"]:
             racing["done"] = True
             assign_to_ivf_index(
@@ -271,14 +271,14 @@ def test_compact_ivf_store_preserves_racing_ingest(spark, tmp_path):
                 index_dir,
                 ingest_id="racer",
             )
-        return real_commit(store_path, mutate)
+        return real_commit(path, mutate, default)
 
-    orig = D._commit_manifest_full
-    D._commit_manifest_full = racy_commit
+    orig = SC.update_json
+    SC.update_json = racy_commit
     try:
         C.compact_ivf_store(spark, index_dir)
     finally:
-        D._commit_manifest_full = orig
+        SC.update_json = orig
 
     ids = _read_manifest(index_dir)
     assert "racer" in ids and len(ids) == 2, ids

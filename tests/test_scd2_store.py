@@ -86,6 +86,38 @@ def test_scd2_fold_late_event_splits_a_run(spark, tmp_path):
     assert got[(1, 3)][0] == "a" and got[(1, 3)][1] == d(2024, 1, 10)
 
 
+def test_scd2_compaction_hint_matches_the_census_path(spark, tmp_path, monkeypatch):
+    """compact_scd2_store hands upsert_into_store the buckets it
+    observed with the store's own bucket expression; the store it
+    leaves holds the same rows as an upsert that takes its own bucket
+    census instead."""
+    from datapoints_csv_extractor_spark.plans import scd2_store as S
+    from datapoints_csv_extractor_spark.sinks.merge_store import read_store
+
+    rows = [
+        (u, d(2024, 1, day), u * 100 + day, "ab"[(day // 3) % 2])
+        for u in range(1, 6)
+        for day in range(1, 13)
+    ]
+
+    def compacted(name):
+        store = str(tmp_path / name)
+        scd2_fold(spark, store, _ev(spark, rows), F.col("event_type"), 1,
+                  n_buckets=8)
+        assert compact_scd2_store(spark, store, d(2024, 1, 10), fold_seq=2,
+                                  n_buckets=8) > 0
+        return sorted(tuple(r) for r in read_store(spark, store).collect())
+
+    hinted = compacted("hinted")
+    real_upsert = S.upsert_into_store
+
+    def census_upsert(*args, affected_hint=None, **kwargs):
+        return real_upsert(*args, **kwargs)
+
+    monkeypatch.setattr(S, "upsert_into_store", census_upsert)
+    assert compacted("census") == hinted
+
+
 def test_scd2_compaction_is_exact_and_guards_late_rows(spark, tmp_path):
     store = str(tmp_path / "scd2")
     b1 = [

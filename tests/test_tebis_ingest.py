@@ -278,27 +278,27 @@ def test_catalog_lock_stale_takeover_and_timeout(tmp_path):
     import os
     import time as _time
 
-    from datapoints_csv_extractor_spark.sinks.catalog_store import catalog_lock
+    from datapoints_csv_extractor_spark.sinks.store_commit import lock
 
     path = str(tmp_path / "catalog")
-    lock = f"{path}.lock"
+    lock_file = f"{path}.lock"
     # Abandoned lock (old mtime) is broken and taken over.
-    with open(lock, "w") as f:
+    with open(lock_file, "w") as f:
         f.write("999999")
     old = _time.time() - 600
-    os.utime(lock, (old, old))
-    with catalog_lock(path, timeout=1.0, stale_after=120.0):
-        assert os.path.exists(lock)
-    assert not os.path.exists(lock)
+    os.utime(lock_file, (old, old))
+    with lock(path, timeout=1.0, stale_after=120.0):
+        assert os.path.exists(lock_file)
+    assert not os.path.exists(lock_file)
     # A FRESH foreign lock times out instead of being broken.
-    with open(lock, "w") as f:
+    with open(lock_file, "w") as f:
         f.write("999999")
     import pytest as _pytest
 
     with _pytest.raises(TimeoutError):
-        with catalog_lock(path, timeout=0.3, stale_after=120.0, sleep=lambda s: None):
+        with lock(path, timeout=0.3, stale_after=120.0, sleep=lambda s: None):
             pass
-    os.unlink(lock)
+    os.unlink(lock_file)
 
 
 def test_tebis_export_round_trip(spark, tmp_path):

@@ -14,6 +14,24 @@ import json
 
 from pyspark.sql import functions as F
 
+from datapoints_csv_extractor_spark.operators.dedup import (
+    EMPTY_MANIFEST,
+    manifest_path,
+)
+from datapoints_csv_extractor_spark.operators.textops import _bm25_meta_path
+from datapoints_csv_extractor_spark.sinks.store_commit import (
+    read_json,
+    update_json,
+)
+
+
+def _read_manifest_full(store):
+    return read_json(manifest_path(store), EMPTY_MANIFEST)
+
+
+def _bm25_read_meta(index_dir):
+    return read_json(_bm25_meta_path(index_dir))
+
 
 def _texts(n: int) -> list[str]:
     return [
@@ -26,7 +44,6 @@ def _texts(n: int) -> list[str]:
 
 def test_band_store_tombstones_pre_and_post_compaction(spark, tmp_path):
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
         delete_from_store,
         dedup_incremental,
         store_tombstones,
@@ -85,7 +102,6 @@ def test_ivf_store_tombstones_pre_and_post_compaction(spark, tmp_path):
     import random
 
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
         delete_from_store,
     )
     from datapoints_csv_extractor_spark.operators.similarity import (
@@ -166,7 +182,6 @@ def test_ivf_store_tombstones_pre_and_post_compaction(spark, tmp_path):
 
 def test_bm25_tombstones_pre_and_post_compaction(spark, tmp_path):
     from datapoints_csv_extractor_spark.operators.textops import (
-        _bm25_read_meta,
         append_bm25_shard,
         bm25_topk_from_index,
         build_bm25_index,
@@ -249,7 +264,6 @@ def test_bm25_delete_of_doc_reingested_across_shards(spark, tmp_path):
     # into; deleting that doc must subtract every shard's (count, dl)
     # contribution or N/avgdl drift after delete/compact.
     from datapoints_csv_extractor_spark.operators.textops import (
-        _bm25_read_meta,
         append_bm25_shard,
         build_bm25_index,
         compact_bm25_index,
@@ -324,9 +338,8 @@ def test_manifest_backward_compat_without_deletes_key(tmp_path):
     # A pre-tombstone manifest (no "deletes") reads with an empty
     # ledger and commits preserve it thereafter.
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _commit_manifest,
         _read_manifest,
-        _read_manifest_full,
+        with_ingest,
     )
 
     store = str(tmp_path / "legacy")
@@ -337,7 +350,9 @@ def test_manifest_backward_compat_without_deletes_key(tmp_path):
         json.dump({"ingests": ["a", "b"]}, fh)
     m = _read_manifest_full(store)
     assert m["ingests"] == ["a", "b"] and m["deletes"] == []
-    assert _commit_manifest(store, lambda ids: ids + ["c"]) == ["a", "b", "c"]
+    assert update_json(
+        manifest_path(store), with_ingest("c"), EMPTY_MANIFEST
+    )["ingests"] == ["a", "b", "c"]
     assert _read_manifest(store) == ["a", "b", "c"]
     assert _read_manifest_full(store)["deletes"] == []
 
@@ -507,7 +522,6 @@ def test_refresh_ivf_index_folds_tombstones(spark, tmp_path):
     import random
 
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
         delete_from_store,
     )
     from datapoints_csv_extractor_spark.operators.similarity import (
@@ -553,7 +567,6 @@ def test_ivfpq_incremental_lifecycle_with_deletes(spark, tmp_path):
     import random
 
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
         delete_from_store,
     )
     from datapoints_csv_extractor_spark.operators.similarity import (
@@ -768,7 +781,6 @@ def test_concurrent_band_store_folds_preserve_both_ingests(spark, tmp_path):
     import threading
 
     from datapoints_csv_extractor_spark.operators.dedup import (
-        _read_manifest_full,
         dedup_incremental,
     )
 
